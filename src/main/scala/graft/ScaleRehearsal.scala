@@ -141,16 +141,7 @@ object ScaleRehearsal {
     val sections = sys.env.get("SPARK_GRAFT_REHEARSAL_SECTIONS")
       .map(_.split(",").map(_.trim).toSet)
     def on(s: String): Boolean = sections.forall(_.contains(s))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def materialize(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -282,7 +273,7 @@ object ScaleRehearsal {
         // The skewed corpus' shingle cache is keyed on its own plan —
         // release it (and everything else; the flat family re-persists on
         // demand) before the timed sections.
-        graft.queries.DocQueries.unpersistAllShared(spark)
+        Artifacts.clear(spark)
       }
 
       // Retrieval structural counts (round 10, second pass):
@@ -525,7 +516,7 @@ object ScaleRehearsal {
       // The weight table is dims+1 = 257 longs at EVERY factor by
       // construction; the axis under test is the corpus-linear epoch.
       if (on("perceptron")) {
-        graft.queries.DocQueries.unpersistAllShared(spark)
+        Artifacts.clear(spark)
         val t0 = System.nanoTime()
         val rows = graft.queries.DocQueries
           .q125QualityClassifier(spark, dir).count()
@@ -549,7 +540,7 @@ object ScaleRehearsal {
       if (on("bpeprod") && k == 10) {
         val docs = graft.sources.Tables(spark, dir, "documents")
         def run(n: Int, batched: Boolean): (Double, Int) = {
-          graft.queries.DocQueries.unpersistAllShared(spark)
+          Artifacts.clear(spark)
           val t0 = System.nanoTime()
           val rows =
             if (batched)
@@ -580,7 +571,7 @@ object ScaleRehearsal {
             lit("en").as("lang"), lit("zipf").as("source"),
             lit(8L).as("n_chars"))
         def runZipf(n: Int, batched: Boolean): (Double, Int) = {
-          graft.queries.DocQueries.unpersistAllShared(spark)
+          Artifacts.clear(spark)
           val t0 = System.nanoTime()
           val rows =
             if (batched)
@@ -1506,7 +1497,7 @@ object ScaleRehearsal {
       // doc-family derived relations and the Tables-level persisted
       // inputs. Without the latter, the ×30 pass still holds every
       // earlier factor's fact tables at MEMORY_AND_DISK.
-      graft.queries.DocQueries.unpersistAllShared(spark)
+      Artifacts.clear(spark)
       graft.sources.Tables.release(spark, dir)
     }
     spark.stop()

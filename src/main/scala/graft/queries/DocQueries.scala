@@ -24,21 +24,13 @@ object DocQueries {
   /** Tokenize: lowercase, trim, split on whitespace runs. */
   private def toks(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** The EXACT DataFrame references this family persisted, keyed by
-    * (appId, canonicalized input plan, relation kind). Holding the
-    * reference — rather than rebuilding an equivalent plan at release
-    * time and trusting the cache manager to match it — makes
-    * [[unpersistShared]] release the precise relations that were cached:
-    * a conf-dependent plan difference between the caching and releasing
-    * sessions can no longer turn the release into a silent no-op. */
-  private val shared = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, String), DataFrame]
-
+  /** A persisted session relation of this family, built once per
+    * (input plan, kind) through [[graft.Artifacts]]. The registry holds
+    * the exact reference it persisted, so [[graft.Artifacts.clear]]
+    * releases the precise relation that was cached. */
   private def memoShared(input: DataFrame, kind: String)
                         (build: => DataFrame): DataFrame =
-    shared.getOrElseUpdate(
-      (input.sparkSession.sparkContext.applicationId,
-        input.queryExecution.analyzed.canonicalized, kind),
+    graft.Artifacts(input, kind)(
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The shared TOKENIZED corpus every doc-family query reads:
@@ -59,7 +51,7 @@ object DocQueries {
     * reads the doc family many times per session and the cache manager
     * keeps exactly one copy). Library callers embedding a single query in
     * a longer-lived session can release both shared relations (this one
-    * and the shingle table) with [[DocQueries.unpersistShared]]. */
+    * and the shingle table) with [[graft.Artifacts.clear]]. */
   private def tokenizedDocs(docs: DataFrame): DataFrame =
     memoShared(docs, "tokenized") {
       docs.select(
@@ -235,7 +227,7 @@ object DocQueries {
     * PAIR with zero allocation (its sorted-input contract). Every other
     * consumer treats hs as a set (band min-hash, explode), so the order
     * is free for them. Session-scoped like [[tokenizedDocs]]; released
-    * by [[unpersistShared]]. */
+    * by [[graft.Artifacts.clear]]. */
   private def shingledHashed(tokDf: DataFrame): DataFrame =
     memoShared(tokDf, "shingled") {
       tokDf
@@ -243,48 +235,6 @@ object DocQueries {
         .filter(size(col("sh")) > 0)
         .withColumn("hs", array_sort(transform(col("sh"), x => md5Long(x, 14))))
     }
-
-  /** Release the session-scoped shared caches (tokenized corpus, shingle
-    * table, dedup-loser set) that the doc family builds over `dir`'s
-    * documents table. The registered queries deliberately leave them
-    * cached (the bench and verify harnesses re-read the family many times
-    * per session and the cache manager keeps exactly one copy per plan);
-    * a library caller embedding a single query in a long-lived session
-    * calls this when the doc family is done. Releasing a dir whose family
-    * was never built removes nothing — always safe. Uses the recorded
-    * references from [[shared]], so only relations actually persisted in
-    * THIS session are touched and nothing new is built or cached here. */
-  def unpersistShared(spark: SparkSession, dir: String): Unit = {
-    val docs = Tables(spark, dir, "documents")
-    val appId = spark.sparkContext.applicationId
-    val docsKey = docs.queryExecution.analyzed.canonicalized
-    // Children before parents: losers read the shingle/tokenized caches.
-    shared.remove((appId, docsKey, "losers")).foreach(_.unpersist())
-    shared.get((appId, docsKey, "tokenized")).foreach { tok =>
-      val tokKey = tok.queryExecution.analyzed.canonicalized
-      shared.remove((appId, tokKey, "shingled")).foreach(_.unpersist())
-      shared.remove((appId, tokKey, "bigram-pairs")).foreach(_.unpersist())
-    }
-    shared.remove((appId, docsKey, "tokenized")).foreach(_.unpersist())
-  }
-
-  /** Release EVERY shared relation this session persisted, whatever its
-    * source frame. [[unpersistShared]] releases the family built over a
-    * table dir; the scale rehearsal also builds derived corpora (skewed
-    * text variants) whose cache keys that method cannot name — this is
-    * the harness-side catch-all. */
-  private[graft] def unpersistAllShared(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    shared.keys.filter(_._1 == appId).toSeq.foreach(k =>
-      shared.remove(k).foreach(_.unpersist()))
-    sharedBpe.keys.filter(_._1 == appId).toSeq.foreach(sharedBpe.remove)
-    sharedUnigram.keys.filter(_._1 == appId).toSeq.foreach(sharedUnigram.remove)
-    sharedNPieces.keys.filter(_._1 == appId).toSeq.foreach(sharedNPieces.remove)
-    sharedPerceptron.keys.filter(_._1 == appId).toSeq
-      .foreach(sharedPerceptron.remove)
-    sharedWpVocab.keys.filter(_._1 == appId).toSeq.foreach(sharedWpVocab.remove)
-    EmbedQueries.clearShared(spark)
-  }
 
   /** The banded candidate pairs BEFORE the exact-Jaccard verify — the
     * quantity whose growth decides whether MinHash+LSH survives a scale-up
@@ -1287,7 +1237,7 @@ object DocQueries {
     * losers (q25 policy — the larger doc_id of each verified pair).
     *
     * Persisted like the tokenized/shingle tables (and released by the
-    * same [[unpersistShared]]): three consumers (q41 corpus, q47
+    * same [[graft.Artifacts.clear]]): three consumers (q41 corpus, q47
     * manifest, q52 mix) anti-join against this set, and without the cache
     * each re-runs the band join + Jaccard verify. A few doc_ids per
     * thousand documents — the cheapest relation in the family to keep and
@@ -2121,7 +2071,7 @@ object DocQueries {
 
   /** The reusable operator behind q95: any (doc_id, text) frame. Unlike
     * the registered q95 (which rides the session-scoped tokenizedDocs
-    * cache that [[unpersistShared]] can name and release), this generic
+    * cache that [[graft.Artifacts.clear]] releases), this generic
     * path does NOT memo-cache the pair table — a library caller scoring
     * many ad-hoc frames in one session would otherwise accumulate
     * persisted pair tables keyed on frames no public release method can
@@ -2524,9 +2474,7 @@ object DocQueries {
                        batchCap: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    sharedBpe.getOrElseUpdate(
-      (docs.sparkSession.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized, nMerges, s"batched$batchCap"),
+    graft.Artifacts(docs, ("bpe", nMerges, s"batched$batchCap"))(
       trainBpeBatched(docs, nMerges, batchCap)._1)
       .map { case (st, a, b, m, c, _) => (st, a, b, m, c) }
       .toDF("step", "lhs", "rhs", "merged", "pair_count")
@@ -2654,19 +2602,14 @@ object DocQueries {
   private val bpeE = "\u0002"
 
   /** Driver-value twin of [[memoShared]]: the trained merge list keyed by
-    * (appId, input plan, nMerges). A few tuples of strings -- no persisted
-    * relation to release -- but cleared by [[unpersistAllShared]] so a
+    * (input plan, nMerges). A few tuples of strings -- no persisted
+    * relation to release -- but dropped by [[graft.Artifacts.clear]] so a
     * long-lived session can drop a stale tokenizer explicitly (the key is
     * the INPUT plan, so a changed corpus trains fresh regardless). q104
     * (train) and q105 (encode) share one training run through this. */
-  private val sharedBpe = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, Int, Any), Seq[(Long, String, String, String, Long, Long)]]
-
   private def trainBpe(docs: DataFrame, nMerges: Int, wordpiece: Boolean)
       : Seq[(Long, String, String, String, Long, Long)] =
-    sharedBpe.getOrElseUpdate(
-      (docs.sparkSession.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized, nMerges, wordpiece),
+    graft.Artifacts(docs, ("bpe", nMerges, wordpiece))(
       trainBpeUncached(docs, nMerges, wordpiece))
 
   private def trainBpeUncached(docs: DataFrame, nMerges: Int,
@@ -2868,23 +2811,18 @@ object DocQueries {
 
   /** The trained WordPiece vocabulary artifact: corpus chars + the
     * nMerges merged symbols, memoized beside the merge list it derives
-    * from (cleared by [[unpersistAllShared]]). */
+    * from (dropped by [[graft.Artifacts.clear]]). */
   private[graft] def wordpieceVocab(docs: DataFrame, nMerges: Int): Seq[String] =
-    sharedWpVocab.getOrElseUpdate(
-      (docs.sparkSession.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized, nMerges), {
-        val merged = trainBpe(docs, nMerges, wordpiece = true).map(_._4)
-        val chars = tokenizedDocs(docs)
-          .select(explode(col("toks")).as("w"))
-          .filter(length(col("w")) > 0)
-          .select(explode(split(col("w"), "")).as("c"))
-          .filter(col("c") =!= "")
-          .distinct().collect().map(_.getString(0)).toSeq
-        (chars ++ merged).distinct
-      })
-
-  private val sharedWpVocab = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, Int), Seq[String]]
+    graft.Artifacts(docs, ("wordpiece-vocab", nMerges)) {
+      val merged = trainBpe(docs, nMerges, wordpiece = true).map(_._4)
+      val chars = tokenizedDocs(docs)
+        .select(explode(col("toks")).as("w"))
+        .filter(length(col("w")) > 0)
+        .select(explode(split(col("w"), "")).as("c"))
+        .filter(col("c") =!= "")
+        .distinct().collect().map(_.getString(0)).toSeq
+      (chars ++ merged).distinct
+    }
 
   /** The reusable operator behind q127: per-doc token statistics under
     * the greedy longest-match encoder for any vocabulary. */
@@ -3033,25 +2971,22 @@ object DocQueries {
       : DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // Driver-value memo (the q104/q105 sharedBpe pattern): the EM loop
+    // Driver-value memo (the q104/q105 merge-list pattern): the EM loop
     // is ~2·emRounds·maxWordLen sequential vocab-sized jobs whose cost
     // is job latency, not data — a bench repeat or a train+encode pair
     // should pay it once per session. Key = input plan + dials, so a
-    // changed corpus trains fresh; cleared by [[unpersistAllShared]].
-    sharedUnigram.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized,
-        (maxPieceLen, seedTop, emRounds, vocabSize, maxWordLen)),
-      unigramTrainUncached(docs, maxPieceLen, seedTop, emRounds,
-        vocabSize, maxWordLen))
+    // changed corpus trains fresh; dropped by [[graft.Artifacts.clear]].
+    unigramVocab(docs, maxPieceLen, seedTop, emRounds, vocabSize, maxWordLen)
       .toDF("rank", "piece", "cnt").orderBy("rank")
   }
 
-  private val sharedUnigram = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, Any), Seq[(Long, String, Long)]]
-
-  private val sharedNPieces = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, Any), Seq[(String, Long)]]
+  private def unigramVocab(docs: DataFrame, maxPieceLen: Int, seedTop: Int,
+                           emRounds: Int, vocabSize: Int, maxWordLen: Int)
+      : Seq[(Long, String, Long)] =
+    graft.Artifacts(docs,
+      ("unigram", (maxPieceLen, seedTop, emRounds, vocabSize, maxWordLen)))(
+      unigramTrainUncached(docs, maxPieceLen, seedTop, emRounds,
+        vocabSize, maxWordLen))
 
   /** UNIGRAM ENCODER (q122): q119's serving side — the train/serve pair
     * the BPE family already has (q104/q105). The trained, pruned vocab
@@ -3072,29 +3007,24 @@ object DocQueries {
   def q122UnigramEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables(spark, dir, "documents")
-    val vocabRows = sharedUnigram.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized, (6, 120, 2, 40, 16)),
-      unigramTrainUncached(docs, 6, 120, 2, 40, 16))
+    val vocabRows = unigramVocab(docs, 6, 120, 2, 40, 16)
     // The word → piece-count dictionary is part of the compiled
     // tokenizer (production encoders precompile frequent-word
     // segmentations exactly like this) — vocab-sized driver values,
     // memoized next to the trained vocab so repeated encodes pay the
     // DP once per session.
-    val npRows = sharedNPieces.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        docs.queryExecution.analyzed.canonicalized, (6, 120, 2, 40, 16)), {
-        val tTotal = vocabRows.map(_._3).sum
-        val pTab = vocabRows.map { case (_, piece, cnt) =>
-          (piece, cnt.toDouble / tTotal.toDouble)
-        }.toDF("piece", "p")
-        val (words, wsub) = wordLattice(docs, 6, 16)
-        val piw = wsub.join(broadcast(pTab), "piece")
-          .select("w", "freq", "i", "j", "p").localCheckpoint(false)
-        viterbiSteps(words, piw, 16)
-          .groupBy("w").agg(count(lit(1)).as("n_pieces"))
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      })
+    val npRows = graft.Artifacts(docs, ("unigram-pieces", (6, 120, 2, 40, 16))) {
+      val tTotal = vocabRows.map(_._3).sum
+      val pTab = vocabRows.map { case (_, piece, cnt) =>
+        (piece, cnt.toDouble / tTotal.toDouble)
+      }.toDF("piece", "p")
+      val (words, wsub) = wordLattice(docs, 6, 16)
+      val piw = wsub.join(broadcast(pTab), "piece")
+        .select("w", "freq", "i", "j", "p").localCheckpoint(false)
+      viterbiSteps(words, piw, 16)
+        .groupBy("w").agg(count(lit(1)).as("n_pieces"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    }
     val nPieces = npRows.toDF("w", "n_pieces")
     tokenizedDocs(docs)
       .select(col("doc_id"), explode(col("toks")).as("w"))
@@ -3374,8 +3304,7 @@ object DocQueries {
     // eagerly at construction — sequentially, if built on one thread.
     // Building each arm in a Future overlaps the two model builds
     // (guide §2.6); frames and results are identical, only the
-    // materialization overlaps. The shared token memo is minted above,
-    // on the caller's thread.
+    // materialization overlaps.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val fTarget = Future {
@@ -3818,8 +3747,8 @@ object DocQueries {
     * whose output is dims-bounded, map-side combined); final scoring is
     * one more map-only pass. The corpus never self-joins; the model
     * table is a driver constant like every shipped tokenizer artifact,
-    * memoized per (input plan, dials) and cleared by
-    * [[unpersistAllShared]].
+    * memoized per (input plan, dials) and dropped by
+    * [[graft.Artifacts.clear]].
     *
     * Honesty note on fixture accuracy: the synthetic fixture's lang
     * labels are token-independent by construction (measured: per-token
@@ -3845,11 +3774,6 @@ object DocQueries {
       .withColumn("correct", col("pred") === col("y"))
   }
 
-  /** Trained-model memo — the [[sharedBpe]] driver-value artifact class:
-    * ≤ dims+1 (fid → weight) longs per entry. */
-  private val sharedPerceptron = scala.collection.concurrent.TrieMap
-    .empty[(String, Any, Any), Map[Long, Long]]
-
   /** The TRAINER ARTIFACT accessor: the memoized averaged-perceptron
     * weight table for (input plan, dials) — the driver-value model every
     * scorer (batch q125, streaming q130) ships as a literal. Public so a
@@ -3865,10 +3789,8 @@ object DocQueries {
     // Column.toString is the expression's rendered form — stable per
     // construction and distinct across distinct predicates (Spark 4's
     // Column no longer exposes the expression node directly).
-    sharedPerceptron.getOrElseUpdate(
-      (tok.sparkSession.sparkContext.applicationId,
-        tok.queryExecution.analyzed.canonicalized,
-        (isPositive.toString, dims, epochs)),
+    // The model is a driver value of ≤ dims+1 (fid → weight) longs.
+    graft.Artifacts(tok, ("perceptron", isPositive.toString, dims, epochs))(
       trainPerceptron(tok, isPositive, dims, epochs))
 
   /** The q125 registered model (en-vs-rest, dims = 256, epochs = 3) for
@@ -4797,8 +4719,6 @@ object DocQueries {
       ExecutionContext.fromExecutor(pool)
     def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
     try {
-      // Session memos are minted on the caller’s thread before any
-      // fork (a concurrent first-touch could double-build the persist).
       val tokSnapA = tokenizedDocs(snapA)
       val shSnapA = shingledHashed(tokSnapA)
 

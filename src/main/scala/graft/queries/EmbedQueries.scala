@@ -410,22 +410,14 @@ object EmbedQueries {
     * frame twice (scan side + probe side of the pair join), so a lazy
     * lineage cut pays the fan-out exchange once, not per reference (r19
     * optimization, guide §2.4) — and the memo keeps the returned frame's
-    * plan identity STABLE across calls, which q106's sharedLabels memo
-    * keys on (a fresh checkpoint RDD per call would read as a new corpus
-    * and silently re-cluster the base every invocation — caught in the
-    * r19 quiet-window bench, q106 2.7 → 4.0 s, fixed by this memo). */
-  private val sharedBucketedEmb = scala.collection.concurrent.TrieMap
-    .empty[(String, Any), DataFrame]
-
+    * plan identity STABLE across calls, which q106's label memo keys on
+    * (a fresh checkpoint RDD per call would read as a new corpus and
+    * silently re-cluster the base every invocation — caught in the r19
+    * quiet-window bench, q106 2.7 → 4.0 s, fixed by this memo). */
   private def bucketedEmb(spark: SparkSession, dir: String): DataFrame = {
     withDot(spark)
     val emb = Tables(spark, dir, "embeddings")
-    // Keyed on the CANONICALIZED input plan (the sharedFrameHashes
-    // convention), not the dir string — a corpus regenerated at the same
-    // path reads as a new plan rather than serving stale buckets.
-    sharedBucketedEmb.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        emb.queryExecution.analyzed.canonicalized),
+    graft.Artifacts(emb, "bucketed-emb")(
       emb.repartition(spark.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("embedding"),
           l2(col("embedding")).as("nrm"),
@@ -625,47 +617,12 @@ object EmbedQueries {
     // invocations (bench repeats, verify after bench) measure the
     // INCREMENTAL arm, which is the operator's actual cost; the label
     // table itself is checkpoint-backed, so re-reading it is a block
-    // fetch, not a re-clustering. Released with [[clearShared]].
-    val baseLabels = sharedLabels.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        basePairs.queryExecution.analyzed.canonicalized),
+    // fetch, not a re-clustering. Released by [[graft.Artifacts.clear]].
+    val baseLabels = graft.Artifacts(basePairs, "base-labels")(
       semdedupClusters(basePairs))
     incrementalClusters(baseLabels,
       deltaCosinePairs(spark, dir, isDelta, 0.4))
       .orderBy("cluster_id", "vec_id")
-  }
-
-  /** Session-scoped stored-state surrogates (see q106). Entries hold
-    * checkpoint-backed label frames; clear them when a long-lived
-    * session's corpus changes so stale checkpoint blocks can be GC'd. */
-  private val sharedLabels = scala.collection.concurrent.TrieMap
-    .empty[(String, Any), DataFrame]
-
-  /** Unpersist the checkpoint blocks behind a localCheckpoint'ed frame
-    * before dropping the memo reference — without this the blocks wait
-    * for the ContextCleaner's weak-reference GC, which a long-lived
-    * session under memory pressure shouldn't depend on. The checkpoint
-    * RDD sits in the frame's LogicalRDD leaf. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  private[graft] def clearShared(spark: SparkSession): Unit = {
-    sharedLabels.keys
-      .filter(_._1 == spark.sparkContext.applicationId)
-      .toSeq.foreach(k =>
-        sharedLabels.remove(k).foreach(unpersistCheckpoint))
-    sharedFrameHashes.keys
-      .filter(_._1 == spark.sparkContext.applicationId)
-      .toSeq.foreach(k =>
-        sharedFrameHashes.remove(k).foreach(unpersistCheckpoint))
-    sharedBucketedEmb.keys
-      .filter(_._1 == spark.sparkContext.applicationId)
-      .toSeq.foreach(k =>
-        sharedBucketedEmb.remove(k).foreach(unpersistCheckpoint))
   }
 
   /** Int8 scalar quantization + quantized-space retrieval (q60): each
@@ -1064,25 +1021,16 @@ object EmbedQueries {
       videoPhashPairs(videoFrameHashTable(spark, dir), maxHamming = 3))
       .orderBy("cluster_id", "doc_id")
 
-  /** Session-memoized frame-hash table for q129 (the q104/q125 TrieMap
-    * artifact pattern): the motion-PPM decode + per-frame dHash is the
-    * expensive, deterministic prefix of the query, so it materializes
-    * ONCE per (session, blob-table plan) via localCheckpoint and every
-    * repeat (bench runs the query several times) reuses the
-    * ≤ 8-rows-per-video table instead of re-decoding ~10k videos.
-    * Keyed on the blob table's CANONICALIZED PLAN (the memoShared /
-    * sharedLabels convention), not the dir string — a corpus
-    * regenerated at the same path reads as a new plan (file listing
-    * differs) rather than serving stale hashes. */
-  private val sharedFrameHashes = scala.collection.concurrent.TrieMap
-    .empty[(String, Any), DataFrame]
-
+  /** Session-memoized frame-hash table for q129 (a [[graft.Artifacts]]
+    * entry): the motion-PPM decode + per-frame dHash is the expensive,
+    * deterministic prefix of the query, so it materializes ONCE per
+    * (session, blob-table plan) via localCheckpoint and every repeat
+    * (bench runs the query several times) reuses the
+    * ≤ 8-rows-per-video table instead of re-decoding ~10k videos. */
   private def videoFrameHashTable(spark: SparkSession, dir: String): DataFrame = {
     val blobs = graft.functions.Multimodal
       .documentsAsVideoBlobsWithReexports(spark, dir)
-    sharedFrameHashes.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        blobs.toDF().queryExecution.analyzed.canonicalized),
+    graft.Artifacts(blobs.toDF(), "frame-hashes")(
       graft.functions.Multimodal.videoFrameHashes(blobs).toDF()
         .localCheckpoint())
   }

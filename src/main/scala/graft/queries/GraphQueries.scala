@@ -92,30 +92,22 @@ object GraphQueries {
     // four rank consumers (q134/q139/q146 + q144's authority arm on its
     // own graph) read — a production ranking job stores the edge list
     // and iterates on it, it does not re-project the line table per
-    // ranking dial. Keyed on the line table's canonicalized plan (the
-    // sharedFrameHashes convention: a regenerated corpus reads as a new
-    // plan, never as stale edges); lazily cut so materialization rides
-    // the first consumer's job.
-    sharedCoSupply.getOrElseUpdate(
-      (spark.sparkContext.applicationId,
-        li.queryExecution.analyzed.canonicalized), {
-        val half = li.groupBy("ok").agg(collect_set(col("sk")).as("sks"))
-          .select(explode(col("sks")).as("src"), col("sks"))
-          .select(col("src"), explode(col("sks")).as("dst"))
-          .filter(col("src") < col("dst"))
-          .select("src", "dst").distinct()
-          .localCheckpoint(false) // feeds both union arms
-        val edges = half
-          .union(half.select(col("dst").as("src"), col("src").as("dst")))
-        val nodes = li.select(col("sk").as("node")).distinct()
-        (edges.localCheckpoint(false), nodes.localCheckpoint(false))
-      })
+    // ranking dial. Keyed on the line table's plan through
+    // [[graft.Artifacts]]; lazily cut so materialization rides the first
+    // consumer's job.
+    graft.Artifacts(li, "co-supply") {
+      val half = li.groupBy("ok").agg(collect_set(col("sk")).as("sks"))
+        .select(explode(col("sks")).as("src"), col("sks"))
+        .select(col("src"), explode(col("sks")).as("dst"))
+        .filter(col("src") < col("dst"))
+        .select("src", "dst").distinct()
+        .localCheckpoint(false) // feeds both union arms
+      val edges = half
+        .union(half.select(col("dst").as("src"), col("src").as("dst")))
+      val nodes = li.select(col("sk").as("node")).distinct()
+      (edges.localCheckpoint(false), nodes.localCheckpoint(false))
+    }
   }
-
-  /** [[coSupplyGraph]] memo — (appId, canonicalized line-table plan) →
-    * the cut (edges, nodes) pair. */
-  private val sharedCoSupply = scala.collection.concurrent.TrieMap
-    .empty[(String, Any), (DataFrame, DataFrame)]
 
   /** The reusable operator: damped PageRank (d = 0.85) over any
     * (src, dst) edge frame and (node) frame, `iters` unrolled rounds,

@@ -95,7 +95,7 @@ object Tables {
   }
 
   /** Release every persisted input cached for this (session, dir) — the
-    * Tables-level twin of `DocQueries.unpersistShared`. A multi-corpus run
+    * Tables-level twin of `graft.Artifacts.clear`. A multi-corpus run
     * (the scale rehearsal's ×3/×10/×30 loop) otherwise holds EVERY earlier
     * factor's fact tables at MEMORY_AND_DISK for the whole run; harmless
     * at one corpus, pure spill pressure across several. */

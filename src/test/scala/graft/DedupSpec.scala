@@ -65,7 +65,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("incremental dedup never plans a corpus-self join — every corpus-facing join broadcasts a delta-derived side") {
     import org.apache.spark.sql.functions.col
-    DocQueries.unpersistShared(spark, "/root/testdata/sf0.001")
+    Artifacts.clear(spark)
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
     val plan = DocQueries.incrementalDedup(docs, col("doc_id") % 10 === 7, 0.7, 10)
       .queryExecution.executedPlan.toString

@@ -126,11 +126,11 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("wavFramePeaks: exact frame boundaries, short streams get one frame per sample") {
-    import SparkTestSession.spark.implicits._
+    import spark.implicits._
     val samples = Array[Short](100, -200, 300, -400, 500, -600) // n=6
     val blob = Multimodal.MediaBlob(7L, "audio/wav",
       Multimodal.encodeWavPcm16(samples, 8000))
-    val ds = SparkTestSession.spark.createDataset(Seq(blob))
+    val ds = spark.createDataset(Seq(blob))
     // nFrames=3: spans [0,2) [2,4) [4,6) -> peaks 200, 400, 600
     val got = Multimodal.wavFramePeaks(ds, 3).collect().sortBy(_.frame)
     assert(got.map(f => (f.frame, f.peak)).toSeq ==

@@ -27,7 +27,7 @@ class PlanPinsSpec extends AnyFunSuite {
     // the tiny fixture is a single partition, which lets EnsureRequirements
     // (correctly) elide every exchange — the pin asserts the canonical
     // multi-partition plan shape, not the one-partition degenerate.
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q57_boilerplate_ngrams")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_mg_candidates"),
@@ -131,7 +131,7 @@ class PlanPinsSpec extends AnyFunSuite {
   private def assertTwoLevelRank(name: String): Unit = {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val df = SparkEntry.queries(name)(spark, sfDir)
     val wins = PlanAudit.collectAll(PlanAudit.physical(df))
       .collect { case w: WindowExec => w }
@@ -225,7 +225,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q79: iterated label state is checkpoint-severed — the final plan never re-enters the corpus") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q79_dedup_clusters")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // Every propagation round ends in a localCheckpoint, so the returned
@@ -244,7 +244,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q80: tf-idf shuffles keyed columns only — raw token arrays never cross an exchange") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q80_tfidf_keywords")(spark, sfDir)
       .queryExecution.executedPlan.toString
     val hx = hashExchanges(plan)
@@ -268,7 +268,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q76: approx-cutpoint deciles plan NO window — cuts aggregate + broadcast + map-only binning") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q76_decile_cutpoints")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // The whole point vs q70: no per-stratum sort of the raw corpus. A
@@ -285,7 +285,7 @@ class PlanPinsSpec extends AnyFunSuite {
 
   test("q66: hash-order candidates stay map-only to the join; DF order adds exactly the DF aggregate + join") {
     // Same cache release as the q57 pin (single-partition degenerate).
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val docs = graft.sources.Tables(spark, sfDir, "documents")
     def plan(dfOrder: Boolean): String =
       graft.queries.DocQueries.containmentCandidates(docs, 0.8, dfOrder)
@@ -313,7 +313,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q81: BM25 prunes to query-term postings before any exchange; df/stats/query joins broadcast") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q81_bm25_search")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // The isin prune runs on exploded terms BEFORE the tf aggregate's
@@ -355,7 +355,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q84: hybrid RRF keeps both arms' shapes — semi-join prunes, no cartesian, top-k limited") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q84_hybrid_rrf")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // The lexical arm's derived-term prunes must stay broadcast semi
@@ -402,7 +402,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q87: Jaccard join keeps q66's candidate shape — no cartesian, no shingle-DF aggregate") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q87_docs_jaccard_join")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // The exact verify runs graft_overlap on re-attached hash arrays;
@@ -418,7 +418,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q88: PMI shuffles keyed counts only — token arrays never cross an exchange") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q88_pmi_collocations")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
@@ -432,7 +432,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q90: TV drift explodes the corpus ONCE — vocab table never funnels to one partition") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val df = SparkEntry.queries("q90_source_tv_drift")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     // c_w is a window HASH-PARTITIONED BY TOKEN over the vocab table;
@@ -510,7 +510,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q93: substring spans shuffle hashed positions only — span aggregate reuses the window's doc_id exchange") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q93_exact_substr_spans")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
@@ -546,7 +546,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q95: LM scoring joins the aggregated model — exchanges carry bigram/prefix hashes or doc_id only") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q95_bigram_lm_score")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
@@ -563,7 +563,7 @@ class PlanPinsSpec extends AnyFunSuite {
 
   for (q <- Seq("q96_substr_redact", "q97_substr_redact_keep_one"))
     test(s"$q: rewrite is window-free — covered positions join broadcast, exchanges keyed doc_id/hash") {
-      graft.queries.DocQueries.unpersistShared(spark, sfDir)
+      Artifacts.clear(spark)
       val plan = SparkEntry.queries(q)(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct") &&
@@ -596,7 +596,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q100: the only unpartitioned window runs over the bucket table — the corpus never single-tasks") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q100_token_blocks")(spark, sfDir)
       .queryExecution.executedPlan.toString
     // Exactly one empty-partition-spec window (the bucket-offset scan);
@@ -632,7 +632,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q118: scoring stream joins aggregated models only — every exchange keyed on gram hashes or doc_id") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q118_trigram_lm_score")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
@@ -726,7 +726,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q133: overlap join is an equi-join on the shingle — no cartesian, no BNLJ") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q133_source_overlap")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
@@ -758,7 +758,7 @@ class PlanPinsSpec extends AnyFunSuite {
   }
 
   test("q136: the sketch is a partial-agg native aggregate, probes ride a broadcast") {
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val plan = SparkEntry.queries("q136_cms_freq")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_graft_cms"),

@@ -41,7 +41,7 @@ class SinglePartitionSweepSpec extends AnyFunSuite {
     // Canonical multi-partition shapes: a materialized tiny-fixture
     // cache is one partition, which lets EnsureRequirements elide the
     // very exchanges this sweep audits.
-    graft.queries.DocQueries.unpersistShared(spark, sfDir)
+    Artifacts.clear(spark)
     val bad = PlansDump.audited.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val funnels = PlanAudit.suspectFunnels(df)

@@ -3,21 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for every suite in the forked test JVM.
-  * local[4] keeps test latency low; shuffle.partitions matches cores so
-  * tiny-DataFrame shuffles don't fan out into 200 empty tasks.
+  * local[4] keeps test latency low. A suite that stops the context (the
+  * registry's fresh-context check in ArtifactsSpec) gets a new one on the
+  * next call, so the suites after it still run.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private var current: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = LocalSession(4)
+    current
   }
 }
