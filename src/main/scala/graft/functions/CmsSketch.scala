@@ -130,10 +130,9 @@ object CmsSketch {
       s"graft_cms expects 3 arguments, got ${other.size}")
   }
 
-  /** Idempotent runtime registration (same pattern as KmvSketch). */
+  /** Idempotent runtime registration through [[SessionFunctions]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms", cmsBuilder, "built-in")
+    SessionFunctions.register(spark, "graft_cms" -> cmsBuilder)
 
   /** `SparkSessionExtensions` hook for global cluster-wide loading. */
   def inject(extensions: SparkSessionExtensions): Unit =

@@ -163,10 +163,9 @@ object FreqSketch {
       s"graft_mg_candidates expects 2 arguments, got ${other.size}")
   }
 
-  /** Idempotent runtime registration (same pattern as VectorExpressions). */
+  /** Idempotent runtime registration through [[SessionFunctions]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mg_candidates", mgBuilder, "built-in")
+    SessionFunctions.register(spark, "graft_mg_candidates" -> mgBuilder)
 
   /** `SparkSessionExtensions` hook for global cluster-wide loading. */
   def inject(extensions: SparkSessionExtensions): Unit =

@@ -127,10 +127,9 @@ object KmvSketch {
       s"graft_kmv_mins expects 2 arguments, got ${other.size}")
   }
 
-  /** Idempotent runtime registration (same pattern as FreqSketch). */
+  /** Idempotent runtime registration through [[SessionFunctions]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_mins", kmvBuilder, "built-in")
+    SessionFunctions.register(spark, "graft_kmv_mins" -> kmvBuilder)
 
   /** `SparkSessionExtensions` hook for global cluster-wide loading. */
   def inject(extensions: SparkSessionExtensions): Unit =

@@ -142,10 +142,9 @@ object QuantileSketch {
       s"graft_btk_pairs expects 3 arguments, got ${other.size}")
   }
 
-  /** Idempotent runtime registration (same pattern as KmvSketch). */
+  /** Idempotent runtime registration through [[SessionFunctions]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_btk_pairs", btkBuilder, "built-in")
+    SessionFunctions.register(spark, "graft_btk_pairs" -> btkBuilder)
 
   /** `SparkSessionExtensions` hook for global cluster-wide loading. */
   def inject(extensions: SparkSessionExtensions): Unit =

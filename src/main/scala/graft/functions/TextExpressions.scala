@@ -68,10 +68,9 @@ object TextExpressions {
       s"graft_nfc expects 1 argument, got ${other.size}")
   }
 
-  /** Idempotent runtime registration for library callers. */
+  /** Idempotent runtime registration through [[SessionFunctions]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", nfcBuilder, "built-in")
+    SessionFunctions.register(spark, "graft_nfc" -> nfcBuilder)
 
   /** `SparkSessionExtensions` hook (see [[GraftExtensions]]). */
   def inject(extensions: SparkSessionExtensions): Unit =

@@ -365,16 +365,10 @@ object VectorExpressions {
 
   /** Idempotent runtime registration for library callers (the queries call
     * this themselves; no session config needed). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", simhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_bucket", lshBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_overlap", overlapBuilder, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    SessionFunctions.register(spark, "graft_dot" -> dotBuilder,
+      "graft_simhash" -> simhashBuilder, "graft_lsh_bucket" -> lshBuilder,
+      "graft_overlap" -> overlapBuilder)
 
   /** `SparkSessionExtensions` hook so a cluster can load the functions
     * globally via `spark.sql.extensions=graft.functions.GraftExtensions`. */
@@ -403,5 +397,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     CmsSketch.inject(extensions)
     QuantileSketch.inject(extensions)
     extensions.injectOptimizerRule(_ => graft.plans.GeoGridJoinRule)
+  }
+}
+
+/** Runtime registration shared by every `register` method: a name the
+  * session's function registry already holds (an earlier call, or the
+  * [[GraftExtensions]] hook) is left alone, so a query that registers
+  * its functions on every call neither rebuilds the entry nor makes
+  * Spark warn that it "replaced a previously registered function". */
+private[functions] object SessionFunctions {
+  def register(spark: SparkSession,
+               fns: (String, Seq[Expression] => Expression)*): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -375,7 +375,17 @@ object DocQueries {
     * the per-source token budget inside its language). The exact-prune
     * argument is per-stratum and carries over verbatim. */
   def packToBudget(scored: DataFrame, budget: Long,
-                   strata: Seq[String]): DataFrame = {
+                   strata: Seq[String]): DataFrame =
+    packPrefix(scored, strata, lit(budget), identity)
+
+  /** The one body behind [[packToBudget]] and [[packToBudgets]]: the
+    * quality-bucket histogram prune, then the exact running-total window.
+    * `withBudget` attaches whatever `budget` reads (nothing for a literal;
+    * the inner budgets join for per-stratum budgets) to both the
+    * histogram and the corpus. */
+  private def packPrefix(scored: DataFrame, strata: Seq[String],
+                         budget: Column,
+                         withBudget: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sc = strata.map(col)
     // 1000 buckets over the [0,1] score; floor keeps the bucket edge below
@@ -386,7 +396,7 @@ object DocQueries {
       .agg(sum("n_tokens").as("btoks"))
     val above = Window.partitionBy(sc: _*).orderBy(desc("qb"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val cutoffs = hist
+    val cutoffs = withBudget(hist)
       .withColumn("above", coalesce(sum("btoks").over(above), lit(0L)))
       .filter(col("above") < budget) // bucket still reachable within budget
       .groupBy(sc: _*).agg(min("qb").as("min_qb"))
@@ -397,7 +407,7 @@ object DocQueries {
     // filter() treats as false, so without the explicit isNull arm the row
     // would vanish. Prefilter absence degrades to the pre-optimization
     // plan, never to data loss.
-    val survivors = scored
+    val survivors = withBudget(scored)
       .join(broadcast(cutoffs), strata, "left")
       .filter(qb.isNull || col("min_qb").isNull || qb >= col("min_qb"))
       .drop("min_qb")
@@ -1815,82 +1825,94 @@ object DocQueries {
         col("block_last") - col("block_first") + 1)
   }
 
-  /** EXACT PER-STRATUM RANK, TWO-LEVEL (the [[tokenBlocks]] prefix-sum
-    * idiom applied to ranking): rank every row within its stratum by a
-    * caller-supplied long key — order-isomorphic to the intended sort
-    * order and DISTINCT within each stratum — without ever sorting a
-    * whole stratum in one task. The naive form
-    * (`Window.partitionBy(stratum).orderBy(...)`) serializes each
-    * stratum; at 100 TB a dominant source (a web crawl holding most of
-    * the corpus) funnels through ONE task. Decomposition:
+  /** RANGE-PARTITION PLUS PER-BUCKET OFFSETS — the one low-level
+    * operator under the exact-rank family ([[exactStratumRank]],
+    * [[stratumRowAt]]; the [[tokenBlocks]] prefix-sum idiom applied to
+    * ranking). Ranks within a stratum by a caller-supplied long key —
+    * order-isomorphic to the intended sort order and DISTINCT within
+    * each stratum — are computed without ever sorting a whole stratum
+    * in one task. The naive form (`Window.partitionBy(stratum)
+    * .orderBy(...)`) serializes each stratum; at 100 TB a dominant
+    * source (a web crawl holding most of the corpus) funnels through
+    * ONE task. Decomposition:
     *
     *   1. per-stratum RANGE CUTPOINTS on the key via
     *      `percentile_approx` — a map-combinable aggregate (GK sketch,
     *      partial-merge), output `nBuckets−1` longs per stratum
-    *      regardless of corpus size. Quantile (not fixed-width) cuts
-    *      make the bucketing DISTRIBUTION-ROBUST: a constant-quality
-    *      stratum still splits, because the composite key's tie-break
-    *      bits (doc_id) spread the cutpoints — the same reason Spark's
-    *      own RangePartitioner samples rather than divides the domain;
+    *      regardless of corpus size — plus the stratum size `grp_n`.
+    *      Quantile (not fixed-width) cuts make the bucketing
+    *      DISTRIBUTION-ROBUST: a constant-quality stratum still splits,
+    *      because the composite key's tie-break bits (doc_id) spread the
+    *      cutpoints — the same reason Spark's own RangePartitioner
+    *      samples rather than divides the domain;
     *   2. map-only bucket assignment (count of cuts strictly below the
     *      key) off a ≤ #strata-row broadcast;
-    *   3. per-(stratum, bucket) counts — a real aggregation with
+    *   3. per-(stratum, bucket) counts `bn` — a real aggregation with
     *      map-side combine, output ≤ #strata × nBuckets rows;
-    *   4. running bucket offsets — a window over THAT bucket table only
-    *      (the one place a per-stratum order is inherently needed);
-    *   5. per-bucket `row_number` + offset — windows over ≈ n/nBuckets
-    *      rows each, embarrassingly parallel. rank = boff + row_number
-    *      is EXACT: cutpoint-sketch error moves bucket boundaries, never
-    *      ranks (any cut set that respects the key order partitions the
-    *      order, and both levels count every row exactly once).
+    *   4. running bucket offsets `boff` — a window over THAT bucket
+    *      table only (the one place a per-stratum order is inherently
+    *      needed).
     *
-    * Output = input columns + `grp_n` (stratum size, for percent_rank /
-    * ntile denominators) + `rnk` (1-based exact rank). Identical to the
-    * naive per-stratum window at every bucket count (CalibrationSpec
-    * proves equality at arbitrary nBuckets); consumed by q108
-    * (percent_rank = (rnk−1)/(grp_n−1)) and q70 (ntile(10) restated as
-    * its closed-form over rnk). The offsets join is deliberately NOT
-    * broadcast — at the √n dial it is √n-sized and AQE broadcasts it at
-    * runtime, but a small fixed nBuckets on a huge corpus would make a
-    * forced broadcast a driver hazard, and the equi-join rides the
-    * (stratum, bucket) exchange the per-bucket window needs anyway
-    * (the same adjudication as [[tokenBlocks]]). */
-  def exactStratumRank(df: DataFrame, group: Seq[String], keyCol: String,
-                       nBuckets: Int): DataFrame = {
+    * Returns `(bucketed, offsets)`: the input columns + `grp_n` + `bkt`,
+    * and the (stratum…, bkt, bn, grp_n, boff) bucket table. The entry
+    * points finish with a per-bucket `row_number` + `boff` — windows
+    * over ≈ n/nBuckets rows each, partitioned by (stratum, bucket).
+    * rank = boff + row_number is EXACT: cutpoint-sketch error moves
+    * bucket boundaries, never ranks (any cut set that respects the key
+    * order partitions the order, and both levels count every row
+    * exactly once). */
+  private def rangeBucketOffsets(df: DataFrame, group: Seq[String],
+                                 keyCol: String,
+                                 nBuckets: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     require(nBuckets >= 2, "need at least 2 range buckets")
     val gcols = group.map(col)
     val k = col(keyCol)
     val ps = (1 until nBuckets).map(i => lit(i.toDouble / nBuckets))
-    // Both back-joins are NULL-SAFE on the stratum keys: groupBy (and
-    // the Window.partitionBy this decomposition replaces) treat a NULL
-    // stratum as its own group, so a plain equi-join would silently
-    // drop those rows from the output. `<=>` keeps the semantics
-    // identical to the naive per-stratum window on any corpus
-    // (CalibrationSpec pins a NULL-stratum case).
-    def nullSafeJoin(l: DataFrame, r: DataFrame, keys: Seq[String],
-                     bcast: Boolean): DataFrame = {
-      val rr = keys.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__r_$c"))
-      val cond = keys.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _)
-      l.join(if (bcast) broadcast(rr) else rr, cond)
-        .drop(keys.map(c => s"__r_$c"): _*)
-    }
     val cuts = df.groupBy(gcols: _*).agg(
       percentile_approx(k, array(ps: _*), lit(10000)).as("cuts"),
       count(lit(1)).as("grp_n"))
     val bucketed = nullSafeJoin(df, cuts, group, bcast = true)
       .withColumn("bkt", size(filter(col("cuts"), c => c < k)))
       .drop("cuts")
-    val bCounts = bucketed.groupBy((gcols :+ col("bkt")): _*)
-      .agg(count(lit(1)).as("bn"))
     val byBucket = Window.partitionBy(gcols: _*).orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bCounts
+    val offsets = bucketed.groupBy((gcols :+ col("bkt")): _*)
+      .agg(count(lit(1)).as("bn"), max("grp_n").as("grp_n"))
       .withColumn("boff", coalesce(sum("bn").over(byBucket), lit(0L)))
-      .select((gcols :+ col("bkt") :+ col("boff")): _*)
-    val inBucket = Window.partitionBy((gcols :+ col("bkt")): _*).orderBy(keyCol)
-    nullSafeJoin(bucketed, offsets, group :+ "bkt", bcast = false)
-      .withColumn("rnk", col("boff") + row_number().over(inBucket))
+    (bucketed, offsets)
+  }
+
+  /** Join on `keys` that matches NULL to NULL (`<=>`): groupBy and the
+    * `Window.partitionBy` the rank decomposition replaces treat a NULL
+    * stratum as its own group, so a plain equi-join would silently drop
+    * those rows (CalibrationSpec pins a NULL-stratum case). */
+  private def nullSafeJoin(l: DataFrame, r: DataFrame, keys: Seq[String],
+                           bcast: Boolean): DataFrame = {
+    val rr = keys.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__r_$c"))
+    val cond = keys.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _)
+    l.join(if (bcast) broadcast(rr) else rr, cond)
+      .drop(keys.map(c => s"__r_$c"): _*)
+  }
+
+  /** EXACT PER-STRATUM RANK over [[rangeBucketOffsets]]: every row's
+    * bucket offset joined back, plus `row_number` within its (stratum,
+    * bucket). Output = input columns + `grp_n` (stratum size, for
+    * percent_rank / ntile denominators) + `rnk` (1-based exact rank).
+    * Identical to the naive per-stratum window at every bucket count
+    * (CalibrationSpec proves equality at arbitrary nBuckets); consumed
+    * by q108 (percent_rank = (rnk−1)/(grp_n−1)), q70 (ntile(10)
+    * restated as its closed form over rnk) and q143. The offsets join
+    * is deliberately NOT broadcast — at the √n dial it is √n-sized and
+    * AQE broadcasts it at runtime, but a small fixed nBuckets on a huge
+    * corpus would make a forced broadcast a driver hazard, and the
+    * equi-join rides the (stratum, bucket) exchange the per-bucket
+    * window needs anyway (the same adjudication as [[tokenBlocks]]). */
+  def exactStratumRank(df: DataFrame, group: Seq[String], keyCol: String,
+                       nBuckets: Int): DataFrame = {
+    val (bucketed, offsets) = rangeBucketOffsets(df, group, keyCol, nBuckets)
+    rankInBucket(bucketed, offsets.select((group :+ "bkt" :+ "boff").map(col): _*),
+      group, keyCol, bcast = false)
       .drop("bkt", "boff")
   }
 
@@ -1899,15 +1921,13 @@ object DocQueries {
     * median/MAD family), r19 optimization (guide §2.3: shuffle fewer
     * bytes). `exactStratumRank(...).filter(rnk === t)` ranks EVERY row —
     * the per-bucket window shuffles and sorts the whole corpus to then
-    * discard all but #strata rows. Here the first level (cutpoints,
-    * bucket counts, offsets — all map-combinable aggregates) locates
-    * WHICH bucket holds the target position, and only that bucket's
-    * ≈ n/nBuckets rows per stratum cross the window exchange — the
-    * corpus-scale sort disappears at every scale. Row-for-row equal to
-    * the filtered full rank (CalibrationSpec pins the equality,
-    * NULL strata included): any cut set that respects the key order
-    * partitions the order, and the target bucket's offset + in-bucket
-    * row_number is the exact global rank.
+    * discard all but #strata rows. Here the [[rangeBucketOffsets]] table
+    * is filtered to the ONE bucket per stratum whose [boff+1, boff+bn]
+    * range holds the target position before the back-join, so only that
+    * bucket's ≈ n/nBuckets rows per stratum cross the (stratum, bucket)
+    * window exchange — the corpus-scale sort disappears at every scale.
+    * Row-for-row equal to the filtered full rank (CalibrationSpec pins
+    * the equality, NULL strata and out-of-range targets included).
     *
     * `targetOf` maps the stratum size (`grp_n`) to the 1-based rank to
     * keep — e.g. `n => shiftright(n + 1, 1)` for the lower median.
@@ -1917,44 +1937,33 @@ object DocQueries {
   private[graft] def stratumRowAt(df: DataFrame, group: Seq[String],
                                   keyCol: String, nBuckets: Int,
                                   targetOf: Column => Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nBuckets >= 2, "need at least 2 range buckets")
-    val gcols = group.map(col)
-    val k = col(keyCol)
-    val ps = (1 until nBuckets).map(i => lit(i.toDouble / nBuckets))
-    // Null-safe stratum joins, as in exactStratumRank (NULL is a group).
-    def nullSafeJoin(l: DataFrame, r: DataFrame,
-                     keys: Seq[String]): DataFrame = {
-      val rr = keys.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__r_$c"))
-      val cond = keys.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _)
-      l.join(broadcast(rr), cond).drop(keys.map(c => s"__r_$c"): _*)
-    }
-    val cuts = df.groupBy(gcols: _*).agg(
-      percentile_approx(k, array(ps: _*), lit(10000)).as("cuts"),
-      count(lit(1)).as("grp_n"))
-    val bucketed = nullSafeJoin(df, cuts.drop("grp_n"), group)
-      .withColumn("bkt", size(filter(col("cuts"), c => c < k)))
-      .drop("cuts")
-    val bCounts = bucketed.groupBy((gcols :+ col("bkt")): _*)
-      .agg(count(lit(1)).as("bn"))
-    val byBucket = Window.partitionBy(gcols: _*).orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // ≤ 1 row per stratum: the bucket whose [boff+1, boff+bn] range
-    // holds the target — always a broadcastable #strata-row table.
-    val targets = bCounts
-      .withColumn("boff", coalesce(sum("bn").over(byBucket), lit(0L)))
-      .withColumn("grp_n", sum("bn").over(Window.partitionBy(gcols: _*)))
-      .withColumn("tpos", targetOf(col("grp_n")))
-      .filter(col("boff") < col("tpos") && col("tpos") <= col("boff") + col("bn"))
-      .select((gcols :+ col("bkt") :+ col("boff") :+ col("tpos")): _*)
-    val inGroup = Window.partitionBy(gcols: _*).orderBy(keyCol)
-    nullSafeJoin(bucketed, targets, group :+ "bkt")
-      .withColumn("rnk", col("boff") + row_number().over(inGroup))
-      .filter(col("rnk") === col("tpos"))
-      .drop("bkt", "boff", "tpos", "rnk")
+    val (bucketed, offsets) = rangeBucketOffsets(df, group, keyCol, nBuckets)
+    // Both sides read the target off `grp_n`: with the column live in
+    // both references of `bucketed`, its cutpoint probe stays one plan
+    // and runs once (a side that pruned it would plan a second probe).
+    val tpos = targetOf(col("grp_n"))
+    // ≤ 1 row per stratum — always a broadcastable #strata-row table.
+    val targets = offsets
+      .filter(col("boff") < tpos && tpos <= col("boff") + col("bn"))
+      .select((group :+ "bkt" :+ "boff").map(col): _*)
+    rankInBucket(bucketed, targets, group, keyCol, bcast = true)
+      .filter(col("rnk") === tpos)
+      .drop("grp_n", "bkt", "boff", "rnk")
   }
 
-  /** √n bucket-count dial for [[exactStratumRank]] — the
+  /** The second level of [[rangeBucketOffsets]]: join the chosen bucket
+    * offsets back (null-safe on the stratum) and rank = boff +
+    * row_number within each (stratum, bucket). */
+  private def rankInBucket(bucketed: DataFrame, offsets: DataFrame,
+                           group: Seq[String], keyCol: String,
+                           bcast: Boolean): DataFrame = {
+    val inBucket = org.apache.spark.sql.expressions.Window
+      .partitionBy((group :+ "bkt").map(col): _*).orderBy(keyCol)
+    nullSafeJoin(bucketed, offsets, group :+ "bkt", bcast)
+      .withColumn("rnk", col("boff") + row_number().over(inBucket))
+  }
+
+  /** √n bucket-count dial for [[rangeBucketOffsets]] — the
     * [[tokenBlocksAuto]] policy: both levels stay ≈ √n-sized (the
     * bucket table through the one per-stratum window, each per-bucket
     * partition through row_number). Capped at 4096 so the cutpoint
@@ -2294,34 +2303,9 @@ object DocQueries {
     * runs over ≤ strata × 1001 rows and the exact window over
     * ~budget-sized survivors — nothing corpus-sized is ever sorted. */
   def packToBudgets(scored: DataFrame, budgets: DataFrame,
-                    strata: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sc = strata.map(col)
-    val qb = floor(col("quality") * 1000).cast("long")
-    val hist = scored.groupBy(sc :+ qb.as("qb"): _*)
-      .agg(sum("n_tokens").as("btoks"))
-    val above = Window.partitionBy(sc: _*).orderBy(desc("qb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cutoffs = hist
-      .join(broadcast(budgets.select(sc :+ col("budget"): _*)), strata)
-      .withColumn("above", coalesce(sum("btoks").over(above), lit(0L)))
-      .filter(col("above") < col("budget"))
-      .groupBy(sc: _*).agg(min("qb").as("min_qb"))
-    // Same null-pass posture as packToBudget: a null-quality row or a
-    // stratum the cutoff table cannot name falls through to the exact
-    // window un-pruned rather than vanishing.
-    val survivors = scored
-      .join(broadcast(budgets), strata)
-      .join(broadcast(cutoffs), strata, "left")
-      .filter(qb.isNull || col("min_qb").isNull || qb >= col("min_qb"))
-      .drop("min_qb")
-    val w = Window
-      .partitionBy(sc: _*).orderBy(desc("quality"), asc("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    survivors
-      .withColumn("cum_tokens", sum("n_tokens").over(w))
-      .filter(col("cum_tokens") <= col("budget"))
-  }
+                    strata: Seq[String]): DataFrame =
+    packPrefix(scored, strata, col("budget"),
+      _.join(broadcast(budgets), strata))
 
   /** TEMPERATURE-WEIGHTED SOURCE MIX — the multilingual-LLM sampling rule
     * (weights ∝ massᵅ, α = 1/2) as a batch pack: low-resource sources are
@@ -4370,9 +4354,10 @@ object DocQueries {
     * engine-specific interpolation; the MAD reuses the same rule on
     * |x − med|. All arithmetic integer.
     *
-    * Scale shape: both medians run through [[exactStratumRank]]'s
-    * two-level √n decomposition (the q70/q143 machinery) — NO
-    * per-source window ever sorts a whole source (at 100 TB one source
+    * Scale shape: both medians run through [[stratumRowAt]] over
+    * [[rangeBucketOffsets]], the two-level √n decomposition under q70's
+    * and q143's exact ranks too — NO per-source window ever sorts a
+    * whole source (at 100 TB one source
     * is billions of docs); the med/MAD tables are source-sized
     * broadcasts, and the gate itself is a map-side comparison. */
   def q152MadOutlierGate(spark: SparkSession, dir: String): DataFrame =
@@ -4381,8 +4366,8 @@ object DocQueries {
 
   /** The per-doc deviation table behind q152/q160 over any (doc_id,
     * source, n_chars) frame: (doc_id, source, n_chars, med_chars,
-    * dev, mad_chars). Medians through [[exactStratumRank]]'s √n
-    * decomposition — never a whole-source window sort. */
+    * dev, mad_chars). Medians through [[stratumRowAt]] over the shared
+    * [[rangeBucketOffsets]] operator — never a whole-source window sort. */
   def madDeviations(docs0: DataFrame): DataFrame = {
     // The input frame is referenced ~5× downstream (the bucket-count
     // probe, the med pipeline's cuts + bucketing references, dev's two

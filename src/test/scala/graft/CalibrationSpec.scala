@@ -48,6 +48,19 @@ class CalibrationSpec extends AnyFunSuite {
       s"calibration must equalize acceptance: $calKept")
   }
 
+  /** The lower median per source through stratumRowAt, and the same rows
+    * cut from a full exactStratumRank output, both as sorted (source, k). */
+  private def rowAtMedian(df: org.apache.spark.sql.DataFrame,
+                          b: Int): Seq[org.apache.spark.sql.Row] =
+    graft.queries.DocQueries.stratumRowAt(df, Seq("source"), "k", b,
+      n => shiftright(n + lit(1L), 1))
+      .orderBy("source", "k").collect().toSeq
+
+  private def filteredMedian(
+      ranked: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    ranked.filter(col("rnk") === shiftright(col("grp_n") + lit(1L), 1))
+      .select("source", "k").orderBy("source", "k").collect().toSeq
+
   test("exactStratumRank ≡ naive per-stratum window at arbitrary bucket counts") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -75,6 +88,12 @@ class CalibrationSpec extends AnyFunSuite {
         .as[(String, Long)].collect().toMap
       assert(ns("crawl") == 500L && ns("books") == 3L,
         s"grp_n wrong at nBuckets=$b: $ns")
+      // stratumRowAt ≡ the filtered full rank, row for row, and a
+      // target past grp_n yields no row.
+      assert(rowAtMedian(df, b) == filteredMedian(two),
+        s"row-at diverged from the filtered full rank at nBuckets=$b")
+      assert(graft.queries.DocQueries.stratumRowAt(df, Seq("source"), "k", b,
+        n => n + lit(1L)).count() == 0L, s"target past grp_n kept a row at nBuckets=$b")
     }
   }
 
@@ -100,6 +119,10 @@ class CalibrationSpec extends AnyFunSuite {
     val nulls = two.filter(col("source").isNull)
       .agg(max("grp_n"), max("rnk")).as[(Long, Long)].collect()(0)
     assert(nulls == ((9L, 9L)), s"NULL stratum mis-sized: $nulls")
+    val at = rowAtMedian(df, 3)
+    assert(at.exists(_.isNullAt(0)), s"row-at dropped the NULL stratum: $at")
+    assert(at == filteredMedian(two),
+      "NULL-stratum row-at diverged from the filtered full rank")
   }
 
   test("q70's closed-form decile ≡ ntile(10) over the naive window") {

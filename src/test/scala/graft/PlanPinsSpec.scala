@@ -129,10 +129,14 @@ class PlanPinsSpec extends AnyFunSuite {
     * that kills the q90-class per-stratum funnel (a dominant source
     * serializing into one task) for the exact-rank family. */
   private def assertTwoLevelRank(name: String): Unit = {
+    Artifacts.clear(spark)
+    assertTwoLevelRank(name, SparkEntry.queries(name)(spark, sfDir))
+  }
+
+  private def assertTwoLevelRank(name: String,
+                                 df: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    Artifacts.clear(spark)
-    val df = SparkEntry.queries(name)(spark, sfDir)
     val wins = PlanAudit.collectAll(PlanAudit.physical(df))
       .collect { case w: WindowExec => w }
     assert(wins.nonEmpty, s"$name: expected window operators in the plan")
@@ -165,6 +169,17 @@ class PlanPinsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("percent_rank"),
       s"percent_rank must be restated over the exact rank:\n$plan")
+  }
+
+  test("stratumRowAt: two-level row-at — no per-source window over the corpus") {
+    import org.apache.spark.sql.functions._
+    // A bare median probe over the documents: q152's own plan hides the
+    // rank windows behind the med/MAD lineage cuts.
+    Artifacts.clear(spark)
+    val docs = graft.sources.Tables(spark, sfDir, "documents")
+      .withColumn("rk", col("n_chars") * lit(1L << 40) + col("doc_id"))
+    assertTwoLevelRank("stratumRowAt", graft.queries.DocQueries.stratumRowAt(
+      docs, Seq("source"), "rk", 7, n => shiftright(n + lit(1L), 1)))
   }
 
   test("q111: Hamming shortlist cuts map-side — Partial WindowGroupLimit below the q_id exchange") {
