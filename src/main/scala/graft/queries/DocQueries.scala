@@ -1825,10 +1825,9 @@ object DocQueries {
         col("block_last") - col("block_first") + 1)
   }
 
-  /** RANGE-PARTITION PLUS PER-BUCKET OFFSETS — the one low-level
-    * operator under the exact-rank family ([[exactStratumRank]],
-    * [[stratumRowAt]]; the [[tokenBlocks]] prefix-sum idiom applied to
-    * ranking). Ranks within a stratum by a caller-supplied long key —
+  /** RANGE-PARTITION PLUS PER-BUCKET OFFSETS — the low-level operator
+    * under [[exactStratumRank]] (the [[tokenBlocks]] prefix-sum idiom
+    * applied to ranking). Ranks within a stratum by a caller-supplied long key —
     * order-isomorphic to the intended sort order and DISTINCT within
     * each stratum — are computed without ever sorting a whole stratum
     * in one task. The naive form (`Window.partitionBy(stratum)
@@ -1854,9 +1853,9 @@ object DocQueries {
     *      needed).
     *
     * Returns `(bucketed, offsets)`: the input columns + `grp_n` + `bkt`,
-    * and the (stratum…, bkt, bn, grp_n, boff) bucket table. The entry
-    * points finish with a per-bucket `row_number` + `boff` — windows
-    * over ≈ n/nBuckets rows each, partitioned by (stratum, bucket).
+    * and the (stratum…, bkt, bn, grp_n, boff) bucket table. The rank
+    * finishes with a per-bucket `row_number` + `boff` — windows over
+    * ≈ n/nBuckets rows each, partitioned by (stratum, bucket).
     * rank = boff + row_number is EXACT: cutpoint-sketch error moves
     * bucket boundaries, never ranks (any cut set that respects the key
     * order partitions the order, and both levels count every row
@@ -1886,11 +1885,13 @@ object DocQueries {
   /** Join on `keys` that matches NULL to NULL (`<=>`): groupBy and the
     * `Window.partitionBy` the rank decomposition replaces treat a NULL
     * stratum as its own group, so a plain equi-join would silently drop
-    * those rows (CalibrationSpec pins a NULL-stratum case). */
+    * those rows (CalibrationSpec pins a NULL-stratum case). No keys is
+    * the one global stratum: every row matches. */
   private def nullSafeJoin(l: DataFrame, r: DataFrame, keys: Seq[String],
                            bcast: Boolean): DataFrame = {
     val rr = keys.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__r_$c"))
-    val cond = keys.map(c => col(c) <=> col(s"__r_$c")).reduce(_ && _)
+    val cond = keys.map(c => col(c) <=> col(s"__r_$c"))
+      .reduceOption(_ && _).getOrElse(lit(true))
     l.join(if (bcast) broadcast(rr) else rr, cond)
       .drop(keys.map(c => s"__r_$c"): _*)
   }
@@ -1911,56 +1912,12 @@ object DocQueries {
   def exactStratumRank(df: DataFrame, group: Seq[String], keyCol: String,
                        nBuckets: Int): DataFrame = {
     val (bucketed, offsets) = rangeBucketOffsets(df, group, keyCol, nBuckets)
-    rankInBucket(bucketed, offsets.select((group :+ "bkt" :+ "boff").map(col): _*),
-      group, keyCol, bcast = false)
-      .drop("bkt", "boff")
-  }
-
-  /** THE ROW AT ONE TARGET RANK PER STRATUM — [[exactStratumRank]]
-    * specialized to consumers that keep a single position (the
-    * median/MAD family), r19 optimization (guide §2.3: shuffle fewer
-    * bytes). `exactStratumRank(...).filter(rnk === t)` ranks EVERY row —
-    * the per-bucket window shuffles and sorts the whole corpus to then
-    * discard all but #strata rows. Here the [[rangeBucketOffsets]] table
-    * is filtered to the ONE bucket per stratum whose [boff+1, boff+bn]
-    * range holds the target position before the back-join, so only that
-    * bucket's ≈ n/nBuckets rows per stratum cross the (stratum, bucket)
-    * window exchange — the corpus-scale sort disappears at every scale.
-    * Row-for-row equal to the filtered full rank (CalibrationSpec pins
-    * the equality, NULL strata and out-of-range targets included).
-    *
-    * `targetOf` maps the stratum size (`grp_n`) to the 1-based rank to
-    * keep — e.g. `n => shiftright(n + 1, 1)` for the lower median.
-    * Output: the input columns of the one row per stratum at that rank
-    * (strata whose target falls outside [1, grp_n] yield no row, as the
-    * filtered full rank would). */
-  private[graft] def stratumRowAt(df: DataFrame, group: Seq[String],
-                                  keyCol: String, nBuckets: Int,
-                                  targetOf: Column => Column): DataFrame = {
-    val (bucketed, offsets) = rangeBucketOffsets(df, group, keyCol, nBuckets)
-    // Both sides read the target off `grp_n`: with the column live in
-    // both references of `bucketed`, its cutpoint probe stays one plan
-    // and runs once (a side that pruned it would plan a second probe).
-    val tpos = targetOf(col("grp_n"))
-    // ≤ 1 row per stratum — always a broadcastable #strata-row table.
-    val targets = offsets
-      .filter(col("boff") < tpos && tpos <= col("boff") + col("bn"))
-      .select((group :+ "bkt" :+ "boff").map(col): _*)
-    rankInBucket(bucketed, targets, group, keyCol, bcast = true)
-      .filter(col("rnk") === tpos)
-      .drop("grp_n", "bkt", "boff", "rnk")
-  }
-
-  /** The second level of [[rangeBucketOffsets]]: join the chosen bucket
-    * offsets back (null-safe on the stratum) and rank = boff +
-    * row_number within each (stratum, bucket). */
-  private def rankInBucket(bucketed: DataFrame, offsets: DataFrame,
-                           group: Seq[String], keyCol: String,
-                           bcast: Boolean): DataFrame = {
     val inBucket = org.apache.spark.sql.expressions.Window
       .partitionBy((group :+ "bkt").map(col): _*).orderBy(keyCol)
-    nullSafeJoin(bucketed, offsets, group :+ "bkt", bcast)
+    nullSafeJoin(bucketed, offsets.select((group :+ "bkt" :+ "boff").map(col): _*),
+      group :+ "bkt", bcast = false)
       .withColumn("rnk", col("boff") + row_number().over(inBucket))
+      .drop("bkt", "boff")
   }
 
   /** √n bucket-count dial for [[rangeBucketOffsets]] — the
@@ -4354,63 +4311,81 @@ object DocQueries {
     * engine-specific interpolation; the MAD reuses the same rule on
     * |x − med|. All arithmetic integer.
     *
-    * Scale shape: both medians run through [[stratumRowAt]] over
-    * [[rangeBucketOffsets]], the two-level √n decomposition under q70's
-    * and q143's exact ranks too — NO per-source window ever sorts a
-    * whole source (at 100 TB one source
-    * is billions of docs); the med/MAD tables are source-sized
-    * broadcasts, and the gate itself is a map-side comparison. */
+    * Scale shape: both statistics and the census are read off one
+    * per-source histogram of value counts ([[madHistogram]]). The
+    * corpus is scanned once and crosses one exchange after a map-side
+    * partial count; no window ever reads a corpus row (at 100 TB one
+    * source is billions of docs, but its histogram is bounded by the
+    * value domain), and only the final `orderBy` adds an exchange. */
   def q152MadOutlierGate(spark: SparkSession, dir: String): DataFrame =
     madOutlierGate(Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars")), factor = 3L)
 
-  /** The per-doc deviation table behind q152/q160 over any (doc_id,
-    * source, n_chars) frame: (doc_id, source, n_chars, med_chars,
-    * dev, mad_chars). Medians through [[stratumRowAt]] over the shared
-    * [[rangeBucketOffsets]] operator — never a whole-source window sort. */
-  def madDeviations(docs0: DataFrame): DataFrame = {
-    // The input frame is referenced ~5× downstream (the bucket-count
-    // probe, the med pipeline's cuts + bucketing references, dev's two
-    // references, the final join) — for the funnel callers it is itself
-    // a manifest semi-join that would re-run per reference. One lazy
-    // lineage cut materializes the narrow (doc_id, source, n_chars)
-    // rows inside [[rankBuckets]]'s count job — the same r20 cut
-    // discipline, measured per call site (guide §1.2/§2.4).
-    val docs = docs0.localCheckpoint(false)
-    val nb = rankBuckets(docs)
-    // Composite order-isomorphic rank key (the q70/q143 move): exact on
-    // any corpus with doc_id < 2^40 and n_chars < 2^23. The lower median
-    // is ONE row per source, so it rides [[stratumRowAt]] — only the
-    // median bucket's rows cross the rank window (r19 optimization;
-    // the full-rank-then-filter shape sorted the whole corpus twice).
-    def lowerMedian(df: DataFrame, valCol: String,
-                    outCol: String): DataFrame =
-      stratumRowAt(
-        df.withColumn("rk", col(valCol) * lit(1L << 40) + col("doc_id")),
-        Seq("source"), "rk", nb, n => shiftright(n + lit(1L), 1))
-        .select(col("source"), col(valCol).as(outCol))
-    // med/mad are ≤ #sources-row tables consumed by MULTIPLE plan
-    // references (dev feeds the MAD pipeline ~3× — cuts, bucketing,
-    // bucket counts — and the final join once); without a lineage cut
-    // the med pipeline re-evaluates under every reference, ~4× the whole
-    // median machinery per madDeviations call (r19 optimization, guide
-    // §5 / §3.3: materialize tiny intermediates that truncate repeated
-    // subtrees — measured 4.8 s → 1.9 s at sf0.1 on q152, same rows). */
-    val med = lowerMedian(docs, "n_chars", "med_chars").localCheckpoint(false)
-    val dev = docs.join(broadcast(med), "source")
+  /** THE LOWER MEDIAN OFF A VALUE HISTOGRAM: over (source, `v`, cnt)
+    * rows, one per distinct (source, value), attach as `out` each
+    * source's value at rank (n+1) div 2, n = Σ cnt. A running Σ cnt in
+    * value order puts each value on the rank interval (cum − cnt, cum];
+    * the one value whose interval holds the target is the median, and a
+    * whole-source min(when(…)) spreads it to every row of the source.
+    * Exact: the row at a rank under the (value, doc_id) order depends
+    * only on the cumulative counts, because doc_id only orders rows of
+    * equal value. NULL values sort first, as in that order; a NULL
+    * source is its own partition, as with `Window.partitionBy`
+    * (CalibrationSpec pins the median against [[exactStratumRank]],
+    * MadGateSpec against a naive row_number with NULLs and ties). */
+  private[graft] def withLowerMedian(hist: DataFrame, v: String,
+                                     out: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bySource = Window.partitionBy("source")
+    val t = shiftright(col("n") + lit(1L), 1)
+    hist
+      .withColumn("cum", sum("cnt").over(bySource.orderBy(v)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("n", sum("cnt").over(bySource))
+      .withColumn(out, min(when(col("cum") - col("cnt") < t &&
+        t <= col("cum"), col(v))).over(bySource))
+      .drop("cum", "n")
+  }
+
+  /** The per-source deviation histogram behind every MAD caller:
+    * (source, med_chars, dev, cnt, mad_chars), one row per distinct
+    * (source, |n_chars − med_chars|). The corpus crosses ONE exchange,
+    * the (source, n_chars) value count after its map-side partial; the
+    * histogram is then hash-partitioned by source, and both medians and
+    * the deviation count ride that partitioning with no further
+    * exchange. NULL-source rows are dropped, as the per-doc join on
+    * `source` drops them. */
+  private def madHistogram(docs: DataFrame): DataFrame = {
+    val hist = docs.filter(col("source").isNotNull)
+      .groupBy("source", "n_chars").agg(count(lit(1)).as("cnt"))
+    val devHist = withLowerMedian(hist, "n_chars", "med_chars")
+      .groupBy(col("source"), col("med_chars"),
+        abs(col("n_chars") - col("med_chars")).as("dev"))
+      .agg(sum("cnt").as("cnt"))
+    withLowerMedian(devHist, "dev", "mad_chars")
+  }
+
+  /** The per-doc deviation table behind q160/q171 over any (doc_id,
+    * source, n_chars) frame: the input columns + med_chars, mad_chars
+    * and dev. The source-sized med/MAD table from [[madHistogram]] is
+    * broadcast onto the docs, so the input is read twice: once for the
+    * histogram and once for the map-side join. */
+  def madDeviations(docs: DataFrame): DataFrame = {
+    val stats = madHistogram(docs)
+      .select("source", "med_chars", "mad_chars").distinct()
+    docs.join(broadcast(stats), "source")
       .withColumn("dev", abs(col("n_chars") - col("med_chars")))
-    val mad = lowerMedian(dev.select(col("doc_id"), col("source"),
-      col("dev")), "dev", "mad_chars").localCheckpoint(false)
-    dev.join(broadcast(mad), "source")
   }
 
   /** The reusable gate behind q152 over any (doc_id, source, n_chars)
-    * frame; public so MadGateSpec can plant outliers. */
+    * frame; public so MadGateSpec can plant outliers. The census is one
+    * more aggregate over [[madHistogram]] — each deviation row counts
+    * `cnt` docs — so no corpus row is read past the value count. */
   def madOutlierGate(docs: DataFrame, factor: Long): DataFrame =
-    madDeviations(docs)
+    madHistogram(docs)
       .groupBy("source", "med_chars", "mad_chars")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("dev") > lit(factor) * col("mad_chars"), 1L)
+      .agg(sum("cnt").as("n_docs"),
+        sum(when(col("dev") > lit(factor) * col("mad_chars"), col("cnt"))
           .otherwise(0L)).as("n_outliers"))
       .select(col("source"), col("n_docs"), col("med_chars"),
         col("mad_chars"), col("n_outliers"),

@@ -48,12 +48,14 @@ class CalibrationSpec extends AnyFunSuite {
       s"calibration must equalize acceptance: $calKept")
   }
 
-  /** The lower median per source through stratumRowAt, and the same rows
-    * cut from a full exactStratumRank output, both as sorted (source, k). */
-  private def rowAtMedian(df: org.apache.spark.sql.DataFrame,
-                          b: Int): Seq[org.apache.spark.sql.Row] =
-    graft.queries.DocQueries.stratumRowAt(df, Seq("source"), "k", b,
-      n => shiftright(n + lit(1L), 1))
+  /** The lower median per source read off the (source, k) value
+    * histogram (the MAD gate's median), and the same rows cut from a full
+    * exactStratumRank output, both as sorted (source, k). */
+  private def histogramMedian(
+      df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    graft.queries.DocQueries.withLowerMedian(
+        df.groupBy("source", "k").agg(count(lit(1)).as("cnt")), "k", "med")
+      .select(col("source"), col("med").as("k")).distinct()
       .orderBy("source", "k").collect().toSeq
 
   private def filteredMedian(
@@ -88,12 +90,9 @@ class CalibrationSpec extends AnyFunSuite {
         .as[(String, Long)].collect().toMap
       assert(ns("crawl") == 500L && ns("books") == 3L,
         s"grp_n wrong at nBuckets=$b: $ns")
-      // stratumRowAt ≡ the filtered full rank, row for row, and a
-      // target past grp_n yields no row.
-      assert(rowAtMedian(df, b) == filteredMedian(two),
-        s"row-at diverged from the filtered full rank at nBuckets=$b")
-      assert(graft.queries.DocQueries.stratumRowAt(df, Seq("source"), "k", b,
-        n => n + lit(1L)).count() == 0L, s"target past grp_n kept a row at nBuckets=$b")
+      // The histogram lower median ≡ the filtered full rank, row for row.
+      assert(histogramMedian(df) == filteredMedian(two),
+        s"histogram median diverged from the filtered full rank at nBuckets=$b")
     }
   }
 
@@ -119,10 +118,29 @@ class CalibrationSpec extends AnyFunSuite {
     val nulls = two.filter(col("source").isNull)
       .agg(max("grp_n"), max("rnk")).as[(Long, Long)].collect()(0)
     assert(nulls == ((9L, 9L)), s"NULL stratum mis-sized: $nulls")
-    val at = rowAtMedian(df, 3)
-    assert(at.exists(_.isNullAt(0)), s"row-at dropped the NULL stratum: $at")
+    val at = histogramMedian(df)
+    assert(at.exists(_.isNullAt(0)),
+      s"histogram median dropped the NULL stratum: $at")
     assert(at == filteredMedian(two),
-      "NULL-stratum row-at diverged from the filtered full rank")
+      "NULL-stratum histogram median diverged from the filtered full rank")
+  }
+
+  test("exactStratumRank with no stratum ≡ row_number over the whole frame") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // The global stratum: an empty key list joins every row to the one
+    // cut set and the one offset table (no `<=>` terms to AND together).
+    val df = ((1 to 60).map(i => 1000L + i) ++ (1 to 15).map(i => i * 97L))
+      .toDF("k")
+    val naive = df.withColumn("rnk_naive", row_number().over(Window.orderBy("k")))
+    for (b <- Seq(2, 3, 7)) {
+      val two = graft.queries.DocQueries.exactStratumRank(df, Seq(), "k", b)
+      assert(two.count() == 75L, s"global rank lost rows at nBuckets=$b")
+      val diff = two.join(naive, Seq("k"))
+        .filter(col("rnk") =!= col("rnk_naive") || col("grp_n") =!= 75L)
+        .count()
+      assert(diff == 0L, s"global rank diverged from row_number at nBuckets=$b")
+    }
   }
 
   test("q70's closed-form decile ≡ ntile(10) over the naive window") {

@@ -129,15 +129,11 @@ class PlanPinsSpec extends AnyFunSuite {
     * that kills the q90-class per-stratum funnel (a dominant source
     * serializing into one task) for the exact-rank family. */
   private def assertTwoLevelRank(name: String): Unit = {
-    Artifacts.clear(spark)
-    assertTwoLevelRank(name, SparkEntry.queries(name)(spark, sfDir))
-  }
-
-  private def assertTwoLevelRank(name: String,
-                                 df: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    val wins = PlanAudit.collectAll(PlanAudit.physical(df))
+    Artifacts.clear(spark)
+    val wins = PlanAudit.collectAll(PlanAudit.physical(
+        SparkEntry.queries(name)(spark, sfDir)))
       .collect { case w: WindowExec => w }
     assert(wins.nonEmpty, s"$name: expected window operators in the plan")
     val badStratum = wins.filter { w =>
@@ -171,15 +167,44 @@ class PlanPinsSpec extends AnyFunSuite {
       s"percent_rank must be restated over the exact rank:\n$plan")
   }
 
-  test("stratumRowAt: two-level row-at — no per-source window over the corpus") {
-    import org.apache.spark.sql.functions._
-    // A bare median probe over the documents: q152's own plan hides the
-    // rank windows behind the med/MAD lineage cuts.
+  test("madOutlierGate: one exchange under a partial value count, every window above it") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Partial}
+    import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
     Artifacts.clear(spark)
-    val docs = graft.sources.Tables(spark, sfDir, "documents")
-      .withColumn("rk", col("n_chars") * lit(1L << 40) + col("doc_id"))
-    assertTwoLevelRank("stratumRowAt", graft.queries.DocQueries.stratumRowAt(
-      docs, Seq("source"), "rk", 7, n => shiftright(n + lit(1L), 1)))
+    val gate = graft.queries.DocQueries.madOutlierGate(
+      graft.sources.Tables(spark, sfDir, "documents")
+        .select(col("doc_id"), col("source"), col("n_chars")), 3L)
+    val nodes = PlanAudit.collectAll(PlanAudit.physical(gate))
+    def valueCount(mode: AggregateMode)(a: BaseAggregateExec): Boolean =
+      a.groupingExpressions.map(_.name) == Seq("source", "n_chars") &&
+        a.aggregateExpressions.nonEmpty &&
+        a.aggregateExpressions.forall(_.mode == mode)
+    val counts = nodes.collect {
+      case a: BaseAggregateExec if valueCount(Final)(a) => a
+    }
+    assert(counts.size == 1,
+      s"expected one (source, n_chars) value count:\n${gate.queryExecution.executedPlan}")
+    val vc = counts.head
+    // Corpus rows cross exactly one exchange, after a map-side partial
+    // count: a second one (or none over a partial) means corpus rows
+    // are shuffled for the medians again.
+    val below = vc.collect { case e: ShuffleExchangeExec => e }
+    assert(below.size == 1 && below.head.child.exists {
+        case a: BaseAggregateExec => valueCount(Partial)(a)
+        case _ => false
+      }, s"expected one exchange over a partial value count:\n${vc.treeString}")
+    // Every median/MAD window reads histogram rows, never corpus rows.
+    val wins = nodes.collect { case w: WindowExec => w }
+    assert(wins.nonEmpty && wins.forall(_.exists(_ eq vc)),
+      s"a window does not sit above the value count:\n${wins.map(_.treeString).mkString("\n")}")
+    // No lineage cut: the gate builds without running a job.
+    assert(!gate.queryExecution.optimizedPlan.exists(_.isInstanceOf[LogicalRDD]) &&
+      !nodes.exists(_.isInstanceOf[RDDScanExec]),
+      s"unexpected checkpoint in the gate:\n${gate.queryExecution.optimizedPlan}")
   }
 
   test("q111: Hamming shortlist cuts map-side — Partial WindowGroupLimit below the q_id exchange") {
