@@ -244,8 +244,8 @@ case class LshBucketFloat(vec: Expression, planes: Expression)
   * `size(array_intersect(a, b))` for ascending-sorted inputs, without
   * materializing the intersection: `array_intersect` builds a hash set
   * and an output array PER CALL, and q66's verify join evaluates it once
-  * per candidate pair (15.6 M pairs at rehearsal ×30 — the allocation
-  * cost center of the whole containment family; cf.
+  * per candidate pair (15.6 M pairs at ×30 in SCALE.md's sf0.1 record —
+  * the allocation cost center of the whole containment family; cf.
   * `DocQueries.containmentJoinToks`). This is the classic merge-style
   * two-pointer count: one pass, zero allocation, duplicate values
   * counted once (matching array_intersect's distinct semantics — the

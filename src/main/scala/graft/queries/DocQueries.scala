@@ -239,10 +239,9 @@ object DocQueries {
   /** The banded candidate pairs BEFORE the exact-Jaccard verify — the
     * quantity whose growth decides whether MinHash+LSH survives a scale-up
     * (linear in corpus size when banding holds, quadratic when buckets
-    * degenerate). Public so the scale rehearsal (graft.ScaleRehearsal /
-    * SCALE.md) can measure it directly; q25 consumes it via the verify
-    * join. */
-  def minhashCandidates(docs: DataFrame): DataFrame =
+    * degenerate). ScaleShapeSpec pins its count at ×1 and ×4; q25
+    * consumes it via the verify join. */
+  private[graft] def minhashCandidates(docs: DataFrame): DataFrame =
     candPairs(shingledHashed(
       docs.select(col("doc_id"), toks(col("text")).as("toks"))))
 
@@ -853,8 +852,8 @@ object DocQueries {
     dedupClustersWithRounds(pairs, checkpointDir)._1
 
   /** [[dedupClusters]] plus the number of propagation rounds it took to
-    * converge — the quantity the scale rehearsal pins (path halving
-    * should hold it ~constant while the pair graph grows linearly). */
+    * converge — the quantity ScaleShapeSpec pins (path halving holds it
+    * constant while the pair graph grows linearly). */
   private[graft] def dedupClustersWithRounds(
       pairs: DataFrame,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
@@ -1331,10 +1330,7 @@ object DocQueries {
     * Result: exact, oracle-checkable output with the big shuffle keyed on
     * ≤ 1024 distinct values. (The sf fixtures' vocabulary is smaller than
     * k, so eviction never fires here — FreqSketchSpec exercises the
-    * eviction and merge guarantees on adversarial skewed data, and
-    * ScaleRehearsal re-checks the superset bound on amplified corpora
-    * whose vocabulary exceeds k, where eviction and merge compaction run
-    * for real.) */
+    * eviction and merge guarantees on adversarial skewed data.) */
   def q57BoilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.FreqSketch.register(spark)
     val grams = bigramSlots(Tables(spark, dir, "documents"))
@@ -1352,10 +1348,8 @@ object DocQueries {
   /** Exploded bigram slots of the tokenized corpus — one row per adjacent
     * token pair, the input relation of both q57 passes. Adjacent-pair
     * slices, not an index lambda — same O(n) HOF reasoning as
-    * [[shingles]]. Public so ScaleRehearsal can value-check the
-    * Misra–Gries superset bound against exact counts on the same
-    * relation. */
-  private[graft] def bigramSlots(docs: DataFrame): DataFrame = {
+    * [[shingles]]. */
+  private def bigramSlots(docs: DataFrame): DataFrame = {
     val tk = col("toks")
     val n = size(tk)
     val bigrams = when(n >= 2,
@@ -1458,8 +1452,8 @@ object DocQueries {
 
   /** The prefix-join candidate pairs BEFORE the exact verify — the
     * quantity whose growth decides whether prefix filtering survives a
-    * scale-up (≈ linear while prefix shingles stay selective). Public so
-    * the scale rehearsal can measure it directly, like
+    * scale-up (≈ linear while prefix shingles stay selective).
+    * ScaleShapeSpec pins its count at ×1 and ×4, like
     * [[minhashCandidates]]; q66 consumes it via the verify join.
     * `dfOrder = true` selects the DF-ascending total order (rarest
     * shingles in every prefix — the flag for DF-skewed corpora; see the
@@ -1521,12 +1515,12 @@ object DocQueries {
     // two-pointer pass over the PRE-SORTED hs arrays — identical to
     // size(array_intersect) (distinct-common semantics) but with zero
     // per-pair allocation, where array_intersect builds a hash set and
-    // an output array per candidate pair (the ×30 rehearsal's dominant
-    // cost). Equal shingles hash equal, so the hash-set containment
-    // equals the string-set containment unless two DISTINCT shingles of
-    // a pair collide in 56 bits (~2⁻⁵⁶·|A|·|B|); the oracle states the
-    // same md5-derived lists (q25/q51's proven bit-compatible
-    // construction), so both engines see identical sets.
+    // an output array per candidate pair (the dominant cost at ×30 in
+    // SCALE.md's sf0.1 record). Equal shingles hash equal, so the
+    // hash-set containment equals the string-set containment unless two
+    // DISTINCT shingles of a pair collide in 56 bits (~2⁻⁵⁶·|A|·|B|); the
+    // oracle states the same md5-derived lists (q25/q51's proven
+    // bit-compatible construction), so both engines see identical sets.
     //
     // The threshold cut uses the UNROUNDED ratio; round(…,4) is applied
     // only to the output column. Cutting on the rounded value would admit
@@ -1580,13 +1574,6 @@ object DocQueries {
   def jaccardJoin(docs: DataFrame, threshold: Double): DataFrame =
     jaccardJoinToks(
       docs.select(col("doc_id"), toks(col("text")).as("toks")), threshold)
-
-  /** The canonicalized (doc_a < doc_b) candidate pairs BEFORE q87's exact
-    * verify — the growth-deciding quantity, public for the scale
-    * rehearsal like [[minhashCandidates]]/[[containmentCandidates]]. */
-  def jaccardCandidates(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardCandidatesToks(shingledHashed(
-      docs.select(col("doc_id"), toks(col("text")).as("toks"))), threshold)
 
   // Containment candidates list every qualifying (A,B) with A's prefix
   // hitting the overlap — for Jaccard both orientations qualify, so
@@ -2051,14 +2038,6 @@ object DocQueries {
   private def bigramPairs(g: DataFrame): DataFrame =
     g.groupBy("h12", "h1").agg(count(lit(1)).as("c12"))
 
-  /** Structural diagnostic behind q95 (ScaleRehearsal): the model (pair)
-    * table — its cardinality is the only non-corpus-stream relation the
-    * scoring join carries; uncached (the rehearsal measures its size at
-    * factors the memo cache should not pin in memory). */
-  def bigramModel(docs: DataFrame): DataFrame =
-    bigramPairs(bigramStream(
-      docs.select(col("doc_id"), toks(col("text")).as("toks"))))
-
   /** Per bigram instance: (doc_id, 56-bit bigram hash, 56-bit prefix
     * hash) — one corpus pass, fixed-width keys for everything downstream. */
   private def bigramStream(tok: DataFrame): DataFrame = {
@@ -2100,14 +2079,6 @@ object DocQueries {
   /** Text-frame form of [[exactSubstrSpans]]: any (doc_id, text) frame. */
   def exactSubstr(docs: DataFrame, k: Int): DataFrame =
     exactSubstrSpans(
-      docs.select(col("doc_id"), toks(col("text")).as("toks")), k)
-
-  /** Structural diagnostic behind q93 (ScaleRehearsal): the duplicated
-    * (doc, position) table feeding the island merge — the quantity that
-    * must stay ~linear in corpus size for ExactSubstr to survive a
-    * scale-up (it is exactly what the doc_id window sorts). */
-  def exactSubstrPositions(docs: DataFrame, k: Int): DataFrame =
-    dupPositions(
       docs.select(col("doc_id"), toks(col("text")).as("toks")), k)
 
   /** SUBSTRING REDACTION (q96): APPLY the q93 spans — rewrite the corpus
@@ -2416,23 +2387,12 @@ object DocQueries {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.Artifacts(docs, ("bpe", nMerges, s"batched$batchCap"))(
-      trainBpeBatched(docs, nMerges, batchCap)._1)
-      .map { case (st, a, b, m, c, _) => (st, a, b, m, c) }
+      trainBpeBatched(docs, nMerges, batchCap))
       .toDF("step", "lhs", "rhs", "merged", "pair_count")
   }
 
-  /** [[trainBpeBatched]]'s realized JOB count for nMerges merges — the
-    * amortization the batching buys (merges/rounds = mean batch width;
-    * measured in the scale rehearsal on tie-free and all-ties
-    * corpora). */
-  private[graft] def bpeBatchedRounds(docs: DataFrame, nMerges: Int,
-                                      batchCap: Int = 64): (Int, Int) = {
-    val (m, r) = trainBpeBatched(docs, nMerges, batchCap)
-    (m.length, r)
-  }
-
   private def trainBpeBatched(docs: DataFrame, nMerges: Int, batchCap: Int)
-      : (Seq[(Long, String, String, String, Long, Long)], Int) = {
+      : Seq[(Long, String, String, String, Long)] = {
     require(batchCap >= 1)
     val S = bpeS; val E = bpeE
     val words = tokenizedDocs(docs)
@@ -2451,9 +2411,8 @@ object DocQueries {
     // ContextCleaner once unreferenced (the dedupClusters precedent).
     var vocab = words.select(enc.as("s"), col("freq")).localCheckpoint(false)
     val merges =
-      scala.collection.mutable.ListBuffer.empty[(Long, String, String, String, Long, Long)]
+      scala.collection.mutable.ListBuffer.empty[(Long, String, String, String, Long)]
     var step = 1
-    var rounds = 0
     var exhausted = false
     while (step <= nMerges && !exhausted) {
       val syms = split(
@@ -2495,7 +2454,7 @@ object DocQueries {
         val batch = top.take(m)
         batch.zipWithIndex.foreach { case (r, i) =>
           merges += (((step + i).toLong, r.getString(0), r.getString(1),
-            r.getString(0) + r.getString(1), r.getLong(2), 0L))
+            r.getString(0) + r.getString(1), r.getLong(2)))
         }
         val newS = batch.foldLeft(col("s")) { (c, r) =>
           replace(c,
@@ -2505,9 +2464,8 @@ object DocQueries {
         vocab = vocab.withColumn("s", newS).localCheckpoint(false)
         step += m
       }
-      rounds += 1
     }
-    (merges.toSeq, rounds)
+    merges.toSeq
   }
 
   /** q112: the batched trainer at a PRODUCTION-shaped dial — 50 merges
@@ -4501,17 +4459,17 @@ object DocQueries {
     * export) — the at-a-glance answer to "where did my corpus go".
     *
     * Scale shape: nothing new — each stage is its own audited
-    * operator (q20/q152/q51/q143/q150 carry the plans, specs, and
-    * rehearsal rows); the funnel chains them with semi/anti joins on
-    * doc_id (fixed-width keys, never text) and the census rows are
-    * 1-row aggregates unioned at the end. The per-stage ID MANIFESTS
-    * (keep/gate/contaminated doc-id sets) are localCheckpoint-
-    * materialized — exactly what a production funnel persists between
-    * stages — and necessarily so: left unmaterialized, each census
-    * row re-expands the upstream stage subtrees and the COMPOSED tree
-    * grows multiplicatively, which round-17 measured as minutes of
-    * Catalyst analysis before a single task ran (planner time is part
-    * of the 100 TB budget too). */
+    * operator (q20/q152/q51/q143/q150 carry the plans and specs, and
+    * ScaleShapeSpec pins q20's and q51's growth); the funnel chains
+    * them with semi/anti joins on doc_id (fixed-width keys, never text)
+    * and the census rows are 1-row aggregates unioned at the end. The
+    * per-stage ID MANIFESTS (keep/gate/contaminated doc-id sets) are
+    * localCheckpoint-materialized — exactly what a production funnel
+    * persists between stages — and necessarily so: left unmaterialized,
+    * each census row re-expands the upstream stage subtrees and the
+    * COMPOSED tree grows multiplicatively, which round-17 measured as
+    * minutes of Catalyst analysis before a single task ran (planner time
+    * is part of the 100 TB budget too). */
   def q160CurationFunnel(spark: SparkSession, dir: String): DataFrame =
     curationFunnel(Tables(spark, dir, "documents"))
 

@@ -216,9 +216,8 @@ object EmbedQueries {
   /** The parameterized operator behind q46. `nlist` is the coarse-quantizer
     * size (production: k-means offline, nlist ≈ √n — the knob that removes
     * the candidate-join parallelism ceiling); `nProbe` trades recall for
-    * candidate volume. The scale rehearsal runs this at nlist ≈ √n over the
-    * ×10 corpus (SCALE.md) to demonstrate the documented ceiling knob with
-    * measurements, not prose. */
+    * candidate volume. SCALE.md's sf0.1 record ran it at nlist ≈ √n beside
+    * the fixed nlist = 16 at every amplification factor. */
   def ivfAnn(spark: SparkSession, dir: String, nlist: Int, nProbe: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
     ivfCandidates(spark, dir, nlist, nProbe)
@@ -230,7 +229,7 @@ object EmbedQueries {
   /** The IVF candidate set (q_id, vec_id, cosine) BEFORE top-k — the
     * quantity bounded by probed-list occupancy (≈ nProbe/nlist of the
     * corpus under balanced lists), which is what decides whether IVF
-    * survives a scale-up. Public so the rehearsal can count it. */
+    * survives a scale-up. */
   def ivfCandidates(spark: SparkSession, dir: String,
                     nlist: Int, nProbe: Int): DataFrame = {
     withDot(spark)

@@ -95,10 +95,10 @@ object Tables {
   }
 
   /** Release every persisted input cached for this (session, dir) — the
-    * Tables-level twin of `graft.Artifacts.clear`. A multi-corpus run
-    * (the scale rehearsal's ×3/×10/×30 loop) otherwise holds EVERY earlier
-    * factor's fact tables at MEMORY_AND_DISK for the whole run; harmless
-    * at one corpus, pure spill pressure across several. */
+    * Tables-level twin of `graft.Artifacts.clear`. A session that reads
+    * several corpora (ScaleShapeSpec's ×1 and ×4 dirs) otherwise holds
+    * EVERY earlier corpus' fact tables at MEMORY_AND_DISK for the rest of
+    * the session; NdcgSpec drops a dir's cache to re-read it. */
   def release(spark: SparkSession, dir: String): Unit = {
     val appId = spark.sparkContext.applicationId
     cache.keys.filter(k => k._1 == appId && k._2 == dir).foreach { k =>

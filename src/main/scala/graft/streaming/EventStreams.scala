@@ -53,8 +53,8 @@ object EventStreams {
     * The stream schema must match the file's physical type, so the batch
     * footer decides the `ts` shape: the shipped fixture stores
     * TIMESTAMP(NANOS) (arriving as nano-long under the flag, rebuilt to
-    * micros here), while rewritten fixtures (e.g. the scale-rehearsal
-    * amplified tables) store a plain micro TIMESTAMP that passes through —
+    * micros here), while rewritten fixtures (e.g. TimestampShapeSpec's
+    * re-written tables) store a plain micro TIMESTAMP that passes through —
     * the same dual handling graft.sources.Tables applies on the batch
     * side. */
   def fileReplaySource(spark: SparkSession, dir: String): DataFrame = {

@@ -44,6 +44,17 @@ class PlanPinsSpec extends AnyFunSuite {
       s"expected exactly one hash exchange on the candidate-joined slots, got $hx:\n$plan")
   }
 
+  test("q03: global min/max/total ride a broadcast one-row aggregate — no window") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val nodes = PlanAudit.collectAll(PlanAudit.physical(
+      SparkEntry.queries("q03_busiest_suppliers")(spark, sfDir)))
+    assert(nodes.collect { case w: WindowExec => w }.isEmpty,
+      s"a window over the per-supplier table runs in one task:\n${nodes.head.treeString}")
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"expected the one-row stats to be broadcast:\n${nodes.head.treeString}")
+  }
+
   test("q59: per-doc repetition is map-only — zero hash exchanges") {
     val plan = SparkEntry.queries("q59_docs_repetition")(spark, sfDir)
       .queryExecution.executedPlan.toString
