@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
@@ -22,7 +21,7 @@ import scala.collection.concurrent.TrieMap
   *     threads never wait on an unrelated key. A build that throws leaves
   *     no entry behind.
   *   - Storage is the caller's: `build` returns the frame already
-  *     persisted or `localCheckpoint`ed, or a driver value.
+  *     persisted or cut ([[Cut.cut]]), or a driver value.
   *   - Release: [[clear]] unpersists every entry's frames and drops its
   *     driver values. A JVM has at most one active SparkContext, so the
   *     first call under a new applicationId drops every older entry. */
@@ -75,8 +74,8 @@ object Artifacts {
     entries.toSeq.flatMap { case ((_, _, kind), e) => e.ready.map(kind -> _) }
 
   /** Release every entry of `spark`'s session: persisted frames are
-    * unpersisted, the checkpoint RDDs behind `localCheckpoint`ed frames
-    * are unpersisted rather than left to the ContextCleaner, and driver
+    * unpersisted, the checkpoint RDDs behind cut frames are
+    * unpersisted rather than left to the ContextCleaner, and driver
     * values are dropped. Entries release in reverse build order, so a
     * cached frame goes before the cached frames it reads. */
   def clear(spark: SparkSession): Unit = {
@@ -87,10 +86,7 @@ object Artifacts {
 
   private def release(v: Any): Unit = v match {
     case ds: Dataset[_] if ds.storageLevel != StorageLevel.NONE => ds.unpersist()
-    case ds: Dataset[_] => ds.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    case ds: Dataset[_] => Cut.release(ds)
     case (a, b) => release(a); release(b)
     case _ => ()
   }

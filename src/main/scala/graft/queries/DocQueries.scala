@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Cut.{cut, fork}
 import graft.sources.Tables
 
 /** LLM-training-data pipeline operators over the `documents` table
@@ -820,8 +821,8 @@ object DocQueries {
     * what the halving step is for). Everything iterated is the
     * NODE-SIZED label table — nodes are docs appearing in ≥ 1 verified
     * pair, measured linear in corpus size (SCALE.md) — never the corpus;
-    * each round is localCheckpoint-ed so the plan stays flat across
-    * iterations (on a real cluster, swap for reliable `checkpoint` so a
+    * each round is cut so the plan stays flat across iterations (with
+    * `spark.checkpoint.dir` set, the cuts are reliable checkpoints and a
     * lost executor cannot orphan round state). Convergence is an exact
     * changed-label count: one action per round over the node table,
     * never a corpus-scan action.
@@ -839,38 +840,23 @@ object DocQueries {
   /** The reusable operator behind q79: any (doc_a, doc_b) pair frame →
     * (doc_id, cluster_id, cluster_size, is_canonical), one row per node
     * of the pair graph. See [[q79DedupClusters]] for the algorithm and
-    * its scale argument.
-    *
-    * `checkpointDir`: None (default) uses eager `localCheckpoint` —
-    * fastest, but round state lives on executor block managers, so an
-    * executor loss mid-iteration kills the job. On a real cluster pass
-    * Some(hdfsPath): rounds then cut lineage through RELIABLE
-    * `checkpoint` to that directory and survive executor loss. Both
-    * modes are spec'd result-equal (DedupClustersSpec). */
-  def dedupClusters(pairs: DataFrame,
-                    checkpointDir: Option[String] = None): DataFrame =
-    dedupClustersWithRounds(pairs, checkpointDir)._1
+    * its scale argument. */
+  def dedupClusters(pairs: DataFrame): DataFrame =
+    dedupClustersWithRounds(pairs)._1
 
   /** [[dedupClusters]] plus the number of propagation rounds it took to
     * converge — the quantity ScaleShapeSpec pins (path halving holds it
     * constant while the pair graph grows linearly). */
   private[graft] def dedupClustersWithRounds(
-      pairs: DataFrame,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // Lineage cut per round: reliable checkpoint when a directory is
-    // configured (executor-loss-safe), eager localCheckpoint otherwise.
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
+      pairs: DataFrame): (DataFrame, Int) = {
     // The pair subtree materializes ONCE before the bidirectional union:
     // without this cut, building the persisted edge relation evaluates
     // the caller's pair plan under BOTH union arms — for every consumer
     // the pair graph is the expensive part (banded candidates + verify),
     // so the old shape paid it twice (r19 optimization, measured 2×
     // on the q79/q129 builds; guide §1.2 "don't compute things twice").
-    val pairCut = cut(pairs.select(col("doc_a"), col("doc_b")))
+    val pairCut = cut("cc.pairs", pairs.select(col("doc_a"), col("doc_b")),
+      eager = true)
     val edges = pairCut
       .select(col("doc_a").as("id"), col("doc_b").as("nbr"))
       .union(pairCut.select(col("doc_b").as("id"), col("doc_a").as("nbr")))
@@ -898,7 +884,7 @@ object DocQueries {
       // §2.4). The previous label rides along as `old` so the
       // convergence count below is a map-only filter over the
       // checkpointed round result, not another node join.
-      val spread = cut(
+      val spread = cut("cc.round.spread",
         if (rounds == 0)
           edges.groupBy("id").agg(min("nbr").as("nmin"))
             .select(col("id"), col("id").as("old"),
@@ -911,11 +897,12 @@ object DocQueries {
           labels.join(nbrMin, Seq("id"), "left")
             .select(col("id"), col("label").as("old"),
               least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        })
-      val halved = cut(spread
+        }, eager = true)
+      val halved = cut("cc.round.halved", spread
         .join(spread.select(col("id").as("label"), col("label").as("ll")).as("y"),
           Seq("label"), "left")
-        .select(col("id"), col("old"), coalesce(col("ll"), col("label")).as("label")))
+        .select(col("id"), col("old"), coalesce(col("ll"), col("label")).as("label")),
+        eager = true)
       changed = halved.filter(col("label") =!= col("old")).count()
       labels = halved.select("id", "label")
       rounds += 1
@@ -1130,28 +1117,27 @@ object DocQueries {
     // registered q84 plan carried 52 corpus-memo scans / 160 Exchanges.
     // All are ≤ #candidate-term-row tables: a lazy lineage cut each
     // materializes them once (r20, guide §1.2/§2.4).
-    val tfq = tokDf.filter(col("doc_id") < queryMaxId)
-      .select(col("doc_id"), explode(col("toks")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).cast("long").as("tf"))
-      .localCheckpoint(false)
+    val tfq = cut("bm25MoreLikeThis.tfq",
+      tokDf.filter(col("doc_id") < queryMaxId)
+        .select(col("doc_id"), explode(col("toks")).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).cast("long").as("tf")))
     val candTerms = tfq.select("term").distinct()
-    val dfq = tokDf
+    val dfq = cut("bm25MoreLikeThis.dfq", tokDf
       .select(explode(array_distinct(col("toks"))).as("term"))
       .join(broadcast(candTerms), Seq("term"), "left_semi")
-      .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
-      .localCheckpoint(false)
+      .groupBy("term").agg(count(lit(1)).cast("long").as("df")))
     val nDocs = tokDf.agg(count(lit(1)).cast("long").as("n_docs"))
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(desc("kw_score"), asc("term"))
-    val qTerms = tfq.join(broadcast(dfq), "term")
+    val qTerms = cut("bm25MoreLikeThis.qTerms", tfq.join(broadcast(dfq), "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("kw_score",
         (col("tf") * col("n_docs")).cast("double") / col("df"))
       .withColumn("kw_rank", row_number().over(byDoc))
       .filter(col("kw_rank") <= nKw)
-      .select(col("doc_id").as("query_id"), col("term"))
-      .localCheckpoint(false)
-    val kwTerms = qTerms.select("term").distinct().localCheckpoint(false)
+      .select(col("doc_id").as("query_id"), col("term")))
+    val kwTerms = cut("bm25MoreLikeThis.kwTerms",
+      qTerms.select("term").distinct())
     // Corpus-side BM25 over the keyword vocabulary — q81's plan with the
     // semi-join prune in place of the literal isin.
     val stats = tokDf
@@ -2409,7 +2395,8 @@ object DocQueries {
     // rendering OOMs near ~40 rounds, far short of a production
     // 30k-merge run. Old round blocks are reclaimed by the
     // ContextCleaner once unreferenced (the dedupClusters precedent).
-    var vocab = words.select(enc.as("s"), col("freq")).localCheckpoint(false)
+    var vocab = cut("trainBpeBatched.vocab",
+      words.select(enc.as("s"), col("freq")))
     val merges =
       scala.collection.mutable.ListBuffer.empty[(Long, String, String, String, Long)]
     var step = 1
@@ -2461,7 +2448,7 @@ object DocQueries {
             lit(S + r.getString(0) + E + S + r.getString(1) + E),
             lit(S + r.getString(0) + r.getString(1) + E))
         }
-        vocab = vocab.withColumn("s", newS).localCheckpoint(false)
+        vocab = cut("trainBpeBatched.vocab", vocab.withColumn("s", newS))
         step += m
       }
     }
@@ -2530,7 +2517,8 @@ object DocQueries {
     // per round until Spark's own plan rendering OOMs near ~40 rounds.
     // Old round blocks are reclaimed by the ContextCleaner once
     // unreferenced (the dedupClusters precedent).
-    var vocab = words.select(enc.as("s"), col("freq")).localCheckpoint(false)
+    var vocab = cut("trainBpeUncached.vocab",
+      words.select(enc.as("s"), col("freq")))
     val merges =
       scala.collection.mutable.ListBuffer.empty[(Long, String, String, String, Long, Long)]
     var step = 1
@@ -2571,9 +2559,8 @@ object DocQueries {
       else {
         val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((step.toLong, a, b, a + b, c, top(0).getLong(3)))
-        vocab = vocab.withColumn("s",
-          replace(col("s"), lit(S + a + E + S + b + E), lit(S + a + b + E)))
-          .localCheckpoint(false)
+        vocab = cut("trainBpeUncached.vocab", vocab.withColumn("s",
+          replace(col("s"), lit(S + a + E + S + b + E), lit(S + a + b + E))))
         step += 1
       }
     }
@@ -2918,8 +2905,8 @@ object DocQueries {
         (piece, cnt.toDouble / tTotal.toDouble)
       }.toDF("piece", "p")
       val (words, wsub) = wordLattice(docs, 6, 16)
-      val piw = wsub.join(broadcast(pTab), "piece")
-        .select("w", "freq", "i", "j", "p").localCheckpoint(false)
+      val piw = cut("q122.piw", wsub.join(broadcast(pTab), "piece")
+        .select("w", "freq", "i", "j", "p"))
       viterbiSteps(words, piw, 16)
         .groupBy("w").agg(count(lit(1)).as("n_pieces"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -2940,22 +2927,20 @@ object DocQueries {
     * front half of the unigram trainer (q119) and encoder (q122). */
   private def wordLattice(docs: DataFrame, maxPieceLen: Int,
                           maxWordLen: Int): (DataFrame, DataFrame) = {
-    val words = tokenizedDocs(docs)
+    val words = cut("wordLattice.words", tokenizedDocs(docs)
       .select(explode(col("toks")).as("w"))
       .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen)
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(false)
+      .groupBy("w").agg(count(lit(1)).as("freq")))
     // All (word, start, end, piece) substring rows up to maxPieceLen —
     // vocab-sized × L², the E-step's candidate lattice.
-    val wsub = words
+    val wsub = cut("wordLattice.wsub", words
       .select(col("w"), col("freq"),
         explode(sequence(lit(0), length(col("w")) - 1)).as("i"))
       .select(col("w"), col("freq"), col("i"),
         explode(sequence(lit(1),
           least(lit(maxPieceLen), length(col("w")) - col("i")))).as("l"))
       .select(col("w"), col("freq"), col("i"), (col("i") + col("l")).as("j"),
-        expr("substr(w, i + 1, l)").as("piece"))
-      .localCheckpoint(false)
+        expr("substr(w, i + 1, l)").as("piece")))
     (words, wsub)
   }
 
@@ -2967,8 +2952,8 @@ object DocQueries {
     * doubles are same-order IEEE in the DuckDB restatement. */
   private def viterbiSteps(words: DataFrame, piw: DataFrame,
                            maxWordLen: Int): DataFrame = {
-    var dp = words.select(col("w"), lit(0).as("j"),
-      lit(1.0).as("sc"), lit(-1).as("back")).localCheckpoint(false)
+    var dp = cut("viterbiSteps.dp", words.select(col("w"), lit(0).as("j"),
+      lit(1.0).as("sc"), lit(-1).as("back")))
     for (j <- 1 to maxWordLen) {
       val stage = piw.filter(col("j") === j).as("c")
         .join(dp.as("d"), col("d.w") === col("c.w") && col("d.j") === col("c.i"))
@@ -2978,18 +2963,17 @@ object DocQueries {
           Window.partitionBy("w").orderBy(desc("sc"), asc("back"))))
         .filter(col("rn") === 1)
         .select(col("w"), lit(j).as("j"), col("sc"), col("back"))
-      dp = dp.unionByName(stage).localCheckpoint(false)
+      dp = cut("viterbiSteps.dp", dp.unionByName(stage))
     }
-    var cur = words.select(col("w"), col("freq"),
-      length(col("w")).as("pos")).localCheckpoint(false)
+    var cur = cut("viterbiSteps.cur", words.select(col("w"), col("freq"),
+      length(col("w")).as("pos")))
     var used = Seq.empty[DataFrame]
     for (_ <- 1 to maxWordLen) {
-      val step = cur.filter(col("pos") > 0).as("b")
+      val step = cut("viterbiSteps.step", cur.filter(col("pos") > 0).as("b")
         .join(dp.as("d"), col("d.w") === col("b.w") && col("d.j") === col("b.pos"))
         .select(col("b.w").as("w"), col("b.freq").as("freq"),
           expr("substr(b.w, d.back + 1, b.pos - d.back)").as("piece"),
-          col("d.back").as("pos"))
-        .localCheckpoint(false)
+          col("d.back").as("pos")))
       used :+= step.select("w", "freq", "piece")
       cur = step.select("w", "freq", "pos")
     }
@@ -3008,23 +2992,22 @@ object DocQueries {
       .withColumn("rn", row_number().over(wSeed)).filter(col("rn") <= seedTop)
       .select("piece", "cnt")
       .union(chars.select("piece", "cnt")).distinct()
-    var vocab = seedVocab.localCheckpoint(false)
+    var vocab = cut("unigramTrainUncached.vocab", seedVocab)
     for (_ <- 1 to emRounds) {
       val tot = vocab.agg(sum("cnt").as("t")).limit(1)
       val pTab = vocab.crossJoin(broadcast(tot))
         .select(col("piece"),
           (col("cnt").cast("double") / col("t").cast("double")).as("p"))
-      val piw = wsub.join(pTab, "piece")
-        .select("w", "freq", "i", "j", "p").localCheckpoint(false)
+      val piw = cut("unigramTrainUncached.piw", wsub.join(pTab, "piece")
+        .select("w", "freq", "i", "j", "p"))
       val usage = viterbiSteps(words, piw, maxWordLen)
         .groupBy("piece").agg(sum("freq").as("cnt"))
       // Unused single chars stay at count 0 — reachability is never
       // sacrificed to the EM (a zero-probability char still segments an
       // otherwise-uncoverable word, ties broken deterministically).
-      vocab = usage
+      vocab = cut("unigramTrainUncached.vocab", usage
         .unionByName(chars.select(col("piece"), lit(0L).as("cnt"))
-          .join(usage.select(col("piece")), Seq("piece"), "left_anti"))
-        .localCheckpoint(false)
+          .join(usage.select(col("piece")), Seq("piece"), "left_anti")))
     }
     val pruned = vocab
       .withColumn("rn", row_number().over(wSeed)).filter(col("rn") <= vocabSize)
@@ -3102,14 +3085,13 @@ object DocQueries {
     // (the two references canonicalize differently under the renames,
     // so exchange reuse misses). All are model-sized: one lazy lineage
     // cut each builds every model table exactly once (r20, guide §1.2).
-    val tcnt = triStream(train).groupBy("h123")
-      .agg(count(lit(1)).as("c123"))
-      .localCheckpoint(false)
-    val bcnt = bigramModelKeys(train).localCheckpoint(false)
+    val tcnt = cut("trigramBackoffScore.tcnt", triStream(train).groupBy("h123")
+      .agg(count(lit(1)).as("c123")))
+    val bcnt = cut("trigramBackoffScore.bcnt", bigramModelKeys(train))
     val uni = train.select(explode(col("toks")).as("w"))
       .select(md5Long(col("w"), 14).as("h"))
-    val ucnt = uni.groupBy("h").agg(count(lit(1)).as("cu"))
-      .localCheckpoint(false)
+    val ucnt = cut("trigramBackoffScore.ucnt",
+      uni.groupBy("h").agg(count(lit(1)).as("cu")))
     // N = Σ_h c(h): the same integer as count(uni), read from the cut
     // model table instead of a second train-slice explode.
     val nTotal = ucnt.agg(coalesce(sum("cu"), lit(0L)).as("n_train")).limit(1)
@@ -3195,28 +3177,24 @@ object DocQueries {
     * tables are vocabulary-bounded; the final cut is a TakeOrdered
     * top-n, never a global sort. */
   def q120ImportanceSelect(spark: SparkSession, dir: String): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val tok = tokenizedDocs(Tables(spark, dir, "documents"))
     // The two model arms (en-reference and raw-corpus) are independent:
     // each builds its own model-table cuts, which AQE materializes
     // eagerly at construction — sequentially, if built on one thread.
-    // Building each arm in a Future overlaps the two model builds
-    // (guide §2.6); frames and results are identical, only the
-    // materialization overlaps.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val fTarget = Future {
-      trigramBackoffScore(tok, col("lang") === "en")
-        .select(col("doc_id"), col("score_ppm").as("target_ppm"))
+    // Forking the arms overlaps the two model builds (guide §2.6);
+    // frames and results are identical, only the materialization
+    // overlaps.
+    val (target, raw) = fork { f =>
+      val target = f("q120.target") {
+        trigramBackoffScore(tok, col("lang") === "en")
+          .select(col("doc_id"), col("score_ppm").as("target_ppm"))
+      }
+      val raw = f("q120.raw") {
+        trigramBackoffScore(tok, lit(true))
+          .select(col("doc_id"), col("score_ppm").as("raw_ppm"))
+      }
+      (target(), raw())
     }
-    val fRaw = Future {
-      trigramBackoffScore(tok, lit(true))
-        .select(col("doc_id"), col("score_ppm").as("raw_ppm"))
-    }
-    val (target, raw) = try {
-      (Await.result(fTarget, Duration.Inf), Await.result(fRaw, Duration.Inf))
-    } finally pool.shutdown()
     val joined = target.join(raw, "doc_id")
       .select(col("doc_id"), col("target_ppm"), col("raw_ppm"),
         (col("target_ppm") - col("raw_ppm")).as("importance_ppm"))
@@ -3501,7 +3479,8 @@ object DocQueries {
     * n_chars) frame; public so BootstrapSpec can pin the paired-width
     * law and the significance verdict on planted separations. */
   def bootstrapDeltaCi(docs: DataFrame, nReplicates: Int): DataFrame = {
-    val rm = bootstrapRepMeans(docs, nReplicates).localCheckpoint()
+    val rm = cut("bootstrapDeltaCi.rm",
+      bootstrapRepMeans(docs, nReplicates), eager = true)
     val pairs = rm.as("x").join(rm.as("y"),
         col("x.b") === col("y.b") && col("x.source") < col("y.source"))
       .select(col("x.source").as("source_a"), col("y.source").as("source_b"),
@@ -3791,9 +3770,9 @@ object DocQueries {
     // join sides canonicalize differently, so exchange reuse misses) —
     // r20 optimization (guide §1.2/§2.4): one lazy lineage cut
     // materializes it exactly once inside the first consumer's job.
-    val g = tok.select(col("source"), explode(shingles(col("toks"))).as("sh"))
-      .distinct()
-      .localCheckpoint(false)
+    val g = cut("sourceOverlap.g",
+      tok.select(col("source"), explode(shingles(col("toks"))).as("sh"))
+        .distinct())
     val n = g.groupBy("source").agg(count(lit(1)).as("nsh"))
     val pairs = g.select(col("sh"), col("source").as("src_a"))
       .join(g.select(col("sh"), col("source").as("src_b")), Seq("sh"))
@@ -3892,7 +3871,10 @@ object DocQueries {
                          block: Option[Column] = None): DataFrame = {
     val keyed = names.withColumn("b",
       block.getOrElse(lit("")).cast("string"))
-    val vars = keyed
+    // both sides of the variant self-join read this frame; a lazy
+    // lineage cut evaluates the explode+distinct once, not per side
+    // (r19 optimization — guide §1.2).
+    val vars = cut("editDistance1Pairs.vars", keyed
       .select(col("k"), col("w"), col("b"),
         explode(sequence(lit(0), length(col("w")))).as("i"))
       .select(col("k"), col("w"),
@@ -3900,11 +3882,7 @@ object DocQueries {
           when(col("i") === 0, col("w"))
             .otherwise(concat(expr("substring(w, 1, i - 1)"),
               expr("substring(w, i + 1)")))).as("v"))
-      .distinct()
-      // both sides of the variant self-join read this frame; a lazy
-      // lineage cut evaluates the explode+distinct once, not per side
-      // (r19 optimization — guide §1.2).
-      .localCheckpoint(false)
+      .distinct())
     vars.select(col("v"), col("k").as("k_a"), col("w").as("w_a"))
       .join(vars.select(col("v"), col("k").as("k_b"),
         col("w").as("w_b")), Seq("v"))
@@ -4140,17 +4118,16 @@ object DocQueries {
     // overlap-graph/PageRank arm was tried and measured NEUTRAL — the
     // authority arm IS the critical path, the scoring arm is short —
     // so the sequential form stays; the r20 revert discipline.)
-    val perSrc = perceptronScore(tok, col("lang") === "en",
+    val perSrc = cut("q144.perSrc", perceptronScore(tok, col("lang") === "en",
         dims = 256, epochs = 3)
       .join(tok.select("doc_id", "source"), "doc_id")
       .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("score").as("sum_score"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("n_docs"), sum("score").as("sum_score")))
     val totals = perSrc.agg(sum("n_docs").as("n_total"),
       sum("sum_score").as("total_score"))
-    val jp = sourceOverlap(tok).filter(col("jaccard_ppm") >= 25000)
-      .select(col("src_a"), col("src_b"))
-      .localCheckpoint(false)
+    val jp = cut("q144.jp",
+      sourceOverlap(tok).filter(col("jaccard_ppm") >= 25000)
+        .select(col("src_a"), col("src_b")))
     val edges = jp.select(col("src_a").as("src"), col("src_b").as("dst"))
       .unionByName(jp.select(col("src_b").as("src"), col("src_a").as("dst")))
     val nodes = docs.select(col("source").as("node")).distinct()
@@ -4500,31 +4477,28 @@ object DocQueries {
     // doc_id order) and the MAD gate reads the attributes directly,
     // instead of semi-joining the winner ids back into the corpus
     // (r20 session 2, guide §2.4: one exchange instead of two).
-    val keepIds = docs
+    val keepIds = cut("curationFunnel.keepIds", docs
       .groupBy(md5(lower(trim(col("text")))).as("h"))
       .agg(min(struct(col("doc_id"), col("source"), col("n_chars")))
         .as("m"))
       .select(col("m.doc_id").as("doc_id"), col("m.source").as("source"),
-        col("m.n_chars").as("n_chars"))
-      .localCheckpoint(false)
-    val lgIds = madDeviations(keepIds)
+        col("m.n_chars").as("n_chars")))
+    val lgIds = cut("curationFunnel.lgIds", madDeviations(keepIds)
       .filter(col("dev") <= lit(3L) * col("mad_chars"))
-      .select("doc_id")
-      .localCheckpoint(false)
-    val contaminated = decontaminateWithin(docs, lgIds,
-        col("source") === "src19", 10)
-      .select("doc_id")
-      .localCheckpoint(false)
-    val cleanIds = lgIds.join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .select("doc_id"))
+    val contaminated = cut("curationFunnel.contaminated",
+      decontaminateWithin(docs, lgIds,
+          col("source") === "src19", 10)
+        .select("doc_id"))
+    val cleanIds = cut("curationFunnel.cleanIds",
+      lgIds.join(contaminated, Seq("doc_id"), "left_anti"))
     // The pack census needs per-doc token COUNTS only — cut the narrow
     // (doc_id, n) frame once; the rank decomposition's several subtree
     // references then rescan two fixed-width columns, never the
     // array-carrying corpus.
-    val tokN = tokenizedDocs(docs)
+    val tokN = cut("curationFunnel.tokN", tokenizedDocs(docs)
       .select(col("doc_id"), size(col("toks")).cast("long").as("n"))
-      .join(cleanIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
+      .join(cleanIds, Seq("doc_id"), "left_semi"))
     def stage(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n")).select(lit(name).as("stage"), col("n"))
     val wPacked = packSequencesN(tokN, 256)
@@ -4612,8 +4586,6 @@ object DocQueries {
     * planted deltas and measure the delta-proportional work. */
   def incrementalCurationFunnel(snapA: DataFrame,
                                 snapB: DataFrame): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val heldSrc = "src19"; val minShared = 10; val madFactor = 3L
     val cap = 256L; val shardSeed = "seed42"; val nShards = 64
 
@@ -4623,20 +4595,15 @@ object DocQueries {
     // sequential ~0.1 s jobs (SparkListener: Σ job wall ≈ wall — the
     // 32-core box sat ~3 % utilized). The artifact DAG has two long
     // independent spines (A-side posting/verdict chain, B-side
-    // dedup/MAD chain), so each artifact now builds-and-cuts inside a
-    // Future that awaits exactly its inputs: every frame, plan and
+    // dedup/MAD chain), so each artifact now builds-and-cuts in a fork
+    // branch that awaits exactly its inputs: every frame, plan and
     // result is IDENTICAL to the sequential form (FunnelIncrementalSpec
     // and the q160-CTE oracle pin both), only the materialization
     // overlaps. A production driver orchestrating a daily funnel
     // threads its stage jobs the same way — at any scale the overlap
     // back-fills the cluster during each stage’s straggler tail
-    // (nothing local[32]-specific). Pool sized to the artifact count:
-    // threads only block on Await or drive job submission.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(24)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutor(pool)
-    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-    try {
+    // (nothing local[32]-specific).
+    fork { f =>
       val tokSnapA = tokenizedDocs(snapA)
       val shSnapA = shingledHashed(tokSnapA)
 
@@ -4647,16 +4614,14 @@ object DocQueries {
         col("doc_id"), col("source"), col("n_chars"),
         md5(col("text")).as("h_raw"),
         md5(lower(trim(col("text")))).as("h"))
-      val fManA = Future { manifest(snapA).localCheckpoint(false) }
-      val fManB = Future { manifest(snapB).localCheckpoint(false) }
+      val manA = f.cut("q171.manA") { manifest(snapA) }
+      val manB = f.cut("q171.manB") { manifest(snapB) }
 
       // Delta classification (q159’s diff, id-keyed, fixed-width).
-      val fDiff = Future {
-        val manA = await(fManA); val manB = await(fManB)
-        manA.select(col("doc_id"), col("h_raw").as("ha"))
-          .join(manB.select(col("doc_id"), col("h_raw").as("hb")),
+      val diff = f.cut("q171.diff") {
+        manA().select(col("doc_id"), col("h_raw").as("ha"))
+          .join(manB().select(col("doc_id"), col("h_raw").as("hb")),
             Seq("doc_id"), "full_outer")
-          .localCheckpoint(false)
       }
       def unchangedIds(diff: DataFrame) =
         diff.filter(col("ha") === col("hb")).select("doc_id")
@@ -4672,97 +4637,88 @@ object DocQueries {
       // postA/tokA/keepA each feed several downstream consumers; a lazy
       // lineage cut materializes each ONCE instead of re-running the
       // explode/aggregate per reference (r19 optimization).
-      val fPostA = Future {
+      val postA = f.cut("q171.postA") {
         shSnapA.select(col("doc_id"), explode(col("hs")).as("h"))
-          .localCheckpoint(false)
       }
-      val fTokA = Future {
+      val tokA = f.cut("q171.tokA") {
         tokSnapA.select(col("doc_id"), size(col("toks")).cast("long").as("n"))
-          .localCheckpoint(false)
       }
       // min over struct(doc_id, …) = the same min-doc_id winner with its
       // gate attributes attached — the A-side MAD gate reads them
       // directly instead of semi-joining winner ids back into manA
       // (the q160 move; the B side MUST re-join manB for attributes
       // because an unaffected normalized hash does not pin B's n_chars).
-      val fKeepA = Future {
-        await(fManA).groupBy("h")
+      val keepA = f.cut("q171.keepA") {
+        manA().groupBy("h")
           .agg(min(struct(col("doc_id"), col("source"), col("n_chars")))
             .as("m"))
           .select(col("h"), col("m.doc_id").as("doc_id"),
             col("m.source").as("source"), col("m.n_chars").as("n_chars"))
-          .localCheckpoint(false)
       }
       // The gate output carries `source` already — keeping it makes the
       // train/held splits map-only filters over the checkpointed gate
       // manifest instead of four id semi-joins back into manA/manB
       // (r20 job-count surgery; guide §2.4 "remove shuffles outright").
-      val fLgA = Future {
-        madDeviations(await(fKeepA)
+      val lgA = f.cut("q171.lgA") {
+        madDeviations(keepA()
             .select(col("doc_id"), col("source"), col("n_chars")))
           .filter(col("dev") <= lit(madFactor) * col("mad_chars"))
-          .select("doc_id", "source").localCheckpoint(false)
+          .select("doc_id", "source")
       }
       def trainIds(lg: DataFrame) =
         lg.filter(col("source") =!= heldSrc).select("doc_id")
       def heldIds(lg: DataFrame) =
         lg.filter(col("source") === heldSrc).select("doc_id")
-      val fTrainCntA = Future {
-        await(fPostA).join(trainIds(await(fLgA)), Seq("doc_id"), "left_semi")
-          .groupBy("h").agg(count(lit(1)).as("cnt_a")).localCheckpoint(false)
+      val trainCntA = f.cut("q171.trainCntA") {
+        postA().join(trainIds(lgA()), Seq("doc_id"), "left_semi")
+          .groupBy("h").agg(count(lit(1)).as("cnt_a"))
       }
-      val fContamA = Future {
-        await(fPostA).join(heldIds(await(fLgA)), Seq("doc_id"), "left_semi")
-          .join(await(fTrainCntA).select("h"), Seq("h"), "left_semi")
+      val contamA = f.cut("q171.contamA") {
+        postA().join(heldIds(lgA()), Seq("doc_id"), "left_semi")
+          .join(trainCntA().select("h"), Seq("h"), "left_semi")
           .groupBy("doc_id").agg(count(lit(1)).as("ns"))
           .filter(col("ns") >= minShared).select("doc_id")
-          .localCheckpoint(false)
       }
 
       // Delta-side text work: ONLY delta docs tokenize/shingle — the
       // honest 100 TB bound this operator exists to enforce.
-      val fTokDelta = Future {
-        snapB.join(deltaBIds(await(fDiff)), Seq("doc_id"), "left_semi")
+      val tokDelta = f.cut("q171.tokDelta") {
+        snapB.join(deltaBIds(diff()), Seq("doc_id"), "left_semi")
           .select(col("doc_id"), toks(col("text")).as("toks"))
-          .localCheckpoint(false)
       }
-      val fPostDelta = Future {
-        await(fTokDelta)
+      val postDelta = f.cut("q171.postDelta") {
+        tokDelta()
           .select(col("doc_id"), shingles(col("toks")).as("sh"))
           .filter(size(col("sh")) > 0)
           .select(col("doc_id"),
             explode(transform(col("sh"), x => md5Long(x, 14))).as("h"))
-          .localCheckpoint(false)
       }
 
       // Stage 1 — incremental exact dedup: keep-verdicts inherit for
       // untouched hash groups (identical membership ⇒ identical min);
       // groups carrying any delta hash recompute from B’s manifest.
-      val fAffectedH = Future {
-        val diff = await(fDiff)
-        await(fManA).join(removedAIds(diff), Seq("doc_id"), "left_semi")
+      val affectedH = f.cut("q171.affectedH") {
+        manA().join(removedAIds(diff()), Seq("doc_id"), "left_semi")
           .select("h")
-          .unionByName(await(fManB).join(deltaBIds(diff),
+          .unionByName(manB().join(deltaBIds(diff()),
             Seq("doc_id"), "left_semi").select("h"))
-          .distinct().localCheckpoint(false)
+          .distinct()
       }
-      val fKeepIdsB = Future {
-        val affectedH = await(fAffectedH)
-        await(fKeepA).join(affectedH, Seq("h"), "left_anti")
+      val keepIdsB = f.cut("q171.keepIdsB") {
+        keepA().join(affectedH(), Seq("h"), "left_anti")
           .select("doc_id")
-          .unionByName(await(fManB).join(affectedH, Seq("h"), "left_semi")
+          .unionByName(manB().join(affectedH(), Seq("h"), "left_semi")
             .groupBy("h").agg(min("doc_id").as("doc_id")).select("doc_id"))
-          .localCheckpoint(false)
       }
 
       // Stage 2 — MAD gate: holistic rank statistics over the updated
       // length manifest (fixed-width; no text touched).
-      val fLgB = Future {
+      val lgB = f.cut("q171.lgB") {
         madDeviations(
-            await(fManB).join(await(fKeepIdsB), Seq("doc_id"), "left_semi")
+            manB().join(keepIdsB(), Seq("doc_id"), "left_semi")
               .select(col("doc_id"), col("source"), col("n_chars")))
           .filter(col("dev") <= lit(madFactor) * col("mad_chars"))
-          .select("doc_id", "source").localCheckpoint(false)
+          .select("doc_id", "source")
       }
 
       // Stage 3 — decontamination via the carrier-count fold. Changed
@@ -4783,104 +4739,93 @@ object DocQueries {
       // ±1 tag attached — ids are unique per side, so the inner join
       // attaches exactly one tag per posting row, the same rows the three
       // semi-joins produced.
-      val fMemb = Future {
-        trainIds(await(fLgA)).withColumn("a_m", lit(1L))
-          .join(trainIds(await(fLgB)).withColumn("b_m", lit(1L)),
+      val memb = f.cut("q171.memb") {
+        trainIds(lgA()).withColumn("a_m", lit(1L))
+          .join(trainIds(lgB()).withColumn("b_m", lit(1L)),
             Seq("doc_id"), "full_outer")
-          .join(await(fDiff).select(col("doc_id"),
+          .join(diff().select(col("doc_id"),
             (col("ha") === col("hb")).as("unch")), Seq("doc_id"), "left")
           .select(col("doc_id"),
             col("a_m").isNotNull.as("in_a"), col("b_m").isNotNull.as("in_b"),
             coalesce(col("unch"), lit(false)).as("unch"))
-          .localCheckpoint(false)
       }
       val leaving = col("in_a") && (!col("in_b") || !col("unch"))
       val enterUnch = col("in_b") && !col("in_a") && col("unch")
-      val fTrainCntB = Future {
-        val memb = await(fMemb)
-        val dH = await(fPostA).join(
-            memb.filter(leaving || enterUnch)
+      val trainCntB = f.cut("q171.trainCntB") {
+        val dH = postA().join(
+            memb().filter(leaving || enterUnch)
               .select(col("doc_id"),
                 when(leaving, lit(-1L)).otherwise(lit(1L)).as("delta")),
             Seq("doc_id"))
             .select(col("h"), col("delta"))
-          .unionByName(await(fPostDelta).join(
-              memb.filter(col("in_b") && !col("unch")).select("doc_id"),
+          .unionByName(postDelta().join(
+              memb().filter(col("in_b") && !col("unch")).select("doc_id"),
               Seq("doc_id"), "left_semi")
             .select(col("h"), lit(1L).as("delta")))
           .groupBy("h").agg(sum("delta").as("d"))
           .filter(col("d") =!= 0)
-        await(fTrainCntA)
+        trainCntA()
           .join(dH, Seq("h"), "full_outer")
           .select(col("h"),
             coalesce(col("cnt_a"), lit(0L)).as("ca"),
             (coalesce(col("cnt_a"), lit(0L)) + coalesce(col("d"), lit(0L)))
               .as("cb"))
-          .localCheckpoint(false)
       }
       // Only shingles whose train-membership FLIPS can change a standing
       // verdict; everything else inherits.
-      val fFlippedH = Future {
-        await(fTrainCntB).filter((col("ca") > 0) =!= (col("cb") > 0))
-          .select("h").localCheckpoint(false)
+      val flippedH = f.cut("q171.flippedH") {
+        trainCntB().filter((col("ca") > 0) =!= (col("cb") > 0))
+          .select("h")
       }
-      val fReverdictIds = Future {
-        val heldIdsB = heldIds(await(fLgB))
-        val touchFlipped = await(fPostA)
-          .join(heldIdsB.join(unchangedIds(await(fDiff)),
+      val reverdictIds = f.cut("q171.reverdictIds") {
+        val heldIdsB = heldIds(lgB())
+        val touchFlipped = postA()
+          .join(heldIdsB.join(unchangedIds(diff()),
             Seq("doc_id"), "left_semi"), Seq("doc_id"), "left_semi")
-          .join(await(fFlippedH), Seq("h"), "left_semi")
+          .join(flippedH(), Seq("h"), "left_semi")
           .select("doc_id").distinct()
-        val enteredHeld = heldIdsB.join(heldIds(await(fLgA)),
+        val enteredHeld = heldIdsB.join(heldIds(lgA()),
           Seq("doc_id"), "left_anti")
-        heldIdsB.join(deltaBIds(await(fDiff)), Seq("doc_id"), "left_semi")
+        heldIdsB.join(deltaBIds(diff()), Seq("doc_id"), "left_semi")
           .unionByName(enteredHeld)
           .unionByName(touchFlipped)
-          .distinct().localCheckpoint(false)
+          .distinct()
       }
-      val fContaminatedB = Future {
-        val reverdictIds = await(fReverdictIds)
-        val postRev = await(fPostA)
-            .join(reverdictIds.join(unchangedIds(await(fDiff)),
+      val contaminatedB = f.cut("q171.contaminatedB") {
+        val postRev = postA()
+            .join(reverdictIds().join(unchangedIds(diff()),
               Seq("doc_id"), "left_semi"), Seq("doc_id"), "left_semi")
-          .unionByName(await(fPostDelta).join(reverdictIds,
+          .unionByName(postDelta().join(reverdictIds(),
             Seq("doc_id"), "left_semi"))
         val contamRev = postRev
-          .join(await(fTrainCntB).filter(col("cb") > 0).select("h"),
+          .join(trainCntB().filter(col("cb") > 0).select("h"),
             Seq("h"), "left_semi")
           .groupBy("doc_id").agg(count(lit(1)).as("ns"))
           .filter(col("ns") >= minShared).select("doc_id")
-        val contamInherited = await(fContamA)
-          .join(heldIds(await(fLgB)), Seq("doc_id"), "left_semi")
-          .join(reverdictIds, Seq("doc_id"), "left_anti")
+        val contamInherited = contamA()
+          .join(heldIds(lgB()), Seq("doc_id"), "left_semi")
+          .join(reverdictIds(), Seq("doc_id"), "left_anti")
         contamRev.unionByName(contamInherited).distinct()
-          .localCheckpoint(false)
       }
-      val fCleanIdsB = Future {
-        await(fLgB).select("doc_id")
-          .join(await(fContaminatedB), Seq("doc_id"), "left_anti")
-          .localCheckpoint(false)
+      val cleanIdsB = f.cut("q171.cleanIdsB") {
+        lgB().select("doc_id")
+          .join(contaminatedB(), Seq("doc_id"), "left_anti")
       }
 
-      // Terminal awaits: everything below is census math on the
-      // checkpointed manifests (the same frames the sequential form
-      // built — from here the code is the original tail verbatim).
-      val manB = await(fManB)
-      val keepIdsB = await(fKeepIdsB)
-      val lgIdsB = await(fLgB).select("doc_id")
-      val cleanIdsB = await(fCleanIdsB)
-      val tokA = await(fTokA)
-      val tokDeltaN = await(fTokDelta).select(col("doc_id"),
+      // Terminal awaits: everything below is census math on the cut
+      // manifests (the same frames the sequential form built).
+      val lgIdsB = lgB().select("doc_id")
+      val tokDeltaN = tokDelta().select(col("doc_id"),
         size(col("toks")).cast("long").as("n"))
-      val uIds = unchangedIds(await(fDiff))
+      val uIds = unchangedIds(diff())
 
       // Stage 4 — pack-window census over per-doc token counts (counts
       // inherit for unchanged docs; the census is q160’s window math,
       // closed-form over stratum counts).
-      val tokCntB = tokA
-          .join(cleanIdsB.join(uIds, Seq("doc_id"), "left_semi"),
+      val tokCntB = tokA()
+          .join(cleanIdsB().join(uIds, Seq("doc_id"), "left_semi"),
             Seq("doc_id"), "left_semi")
-        .unionByName(tokDeltaN.join(cleanIdsB, Seq("doc_id"), "left_semi"))
+        .unionByName(tokDeltaN.join(cleanIdsB(), Seq("doc_id"), "left_semi"))
       val items = tokCntB
         .select(when(col("n") <= cap, col("n")).otherwise(col("n") % cap)
           .as("len"))
@@ -4895,7 +4840,7 @@ object DocQueries {
           (col("wp") + col("wf")).as("n"))
 
       // Stage 5 — shard census over the clean id manifest.
-      val shardRow = cleanIdsB
+      val shardRow = cleanIdsB()
         .select((md5Long(concat(lit(s"$shardSeed:"),
           col("doc_id").cast("string")), 14) % nShards).as("shard"))
         .agg(countDistinct("shard").as("n"))
@@ -4903,14 +4848,14 @@ object DocQueries {
 
       def stage(name: String, df: DataFrame): DataFrame =
         df.agg(count(lit(1)).as("n")).select(lit(name).as("stage"), col("n"))
-      stage("0_raw", manB)
-        .unionByName(stage("1_exact_dedup", keepIdsB))
+      stage("0_raw", manB())
+        .unionByName(stage("1_exact_dedup", keepIdsB()))
         .unionByName(stage("2_length_gate", lgIdsB))
-        .unionByName(stage("3_decontam", cleanIdsB))
+        .unionByName(stage("3_decontam", cleanIdsB()))
         .unionByName(packRow)
         .unionByName(shardRow)
         .orderBy("stage")
-    } finally pool.shutdown()
+    }
   }
 
   /** INCREMENTAL SHARD PUBLISHING (q165): q159's snapshot diff composed

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Cut.cut
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
@@ -417,11 +418,11 @@ object EmbedQueries {
     withDot(spark)
     val emb = Tables(spark, dir, "embeddings")
     graft.Artifacts(emb, "bucketed-emb")(
-      emb.repartition(spark.sparkContext.defaultParallelism)
-        .select(col("vec_id"), col("embedding"),
-          l2(col("embedding")).as("nrm"),
-          lshBucket(col("embedding"), 4).as("bucket"))
-        .localCheckpoint(false))
+      cut("embed.bucketed",
+        emb.repartition(spark.sparkContext.defaultParallelism)
+          .select(col("vec_id"), col("embedding"),
+            l2(col("embedding")).as("nrm"),
+            lshBucket(col("embedding"), 4).as("bucket"))))
   }
 
   private val probeMasks: Seq[Long] = Seq(0L) ++ (0 until 4).map(p => 1L << p)
@@ -466,13 +467,10 @@ object EmbedQueries {
 
   /** The reusable operator behind q101: any (vec_a, vec_b) pair frame →
     * (vec_id, cluster_id, cluster_size, is_canonical), one row per node
-    * of the pair graph. `checkpointDir` as in
-    * [[graft.queries.DocQueries.dedupClusters]]. */
-  def semdedupClusters(pairs: DataFrame,
-                       checkpointDir: Option[String] = None): DataFrame =
+    * of the pair graph, by [[graft.queries.DocQueries.dedupClusters]]. */
+  def semdedupClusters(pairs: DataFrame): DataFrame =
     graft.queries.DocQueries.dedupClusters(
-      pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
-      checkpointDir)
+      pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"),
         col("cluster_size"), col("is_canonical"))
 
@@ -588,8 +586,8 @@ object EmbedQueries {
     * historical component diameter (stars are depth-1), only on how many
     * old clusters a delta chain bridges — the property that keeps round
     * counts flat as the corpus ages. */
-  def incrementalClusters(baseLabels: DataFrame, deltaPairs: DataFrame,
-                          checkpointDir: Option[String] = None): DataFrame = {
+  def incrementalClusters(baseLabels: DataFrame,
+                          deltaPairs: DataFrame): DataFrame = {
     val labelEdges = baseLabels
       .filter(col("vec_id") =!= col("cluster_id"))
       .select(col("vec_id").as("vec_a"), col("cluster_id").as("vec_b"))
@@ -597,8 +595,7 @@ object EmbedQueries {
     // present as the endpoint of every member's star edge. A SINGLETON
     // base cluster cannot exist here (a pair-graph node has a neighbor).
     semdedupClusters(
-      labelEdges.union(deltaPairs.select(col("vec_a"), col("vec_b"))),
-      checkpointDir)
+      labelEdges.union(deltaPairs.select(col("vec_a"), col("vec_b"))))
   }
 
   /** q106: the incremental step demonstrated end-to-end — yesterday's
@@ -921,11 +918,11 @@ object EmbedQueries {
   def imagePhashPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
     // Both self-join sides read `bands`; a lazy cut runs the upstream
     // decode + band explode once, not per side (r20, guide §1.2).
-    val bands = hashes.select(col("doc_id"), col("dhash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("dhash"), 15 * b).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band", "bkey")))
-      .localCheckpoint(false)
+    val bands = cut("imagePhashPairs.bands",
+      hashes.select(col("doc_id"), col("dhash"),
+        posexplode(array((0 until 4).map(b =>
+          shiftright(col("dhash"), 15 * b).bitwiseAND(lit(32767L))): _*))
+          .as(Seq("band", "bkey"))))
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -974,11 +971,10 @@ object EmbedQueries {
   def audioFpPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
     // Both self-join sides read `bands`; a lazy cut runs the upstream
     // decode + band explode once, not per side (r20, guide §1.2).
-    val bands = fps.select(col("doc_id"), col("afp"),
+    val bands = cut("audioFpPairs.bands", fps.select(col("doc_id"), col("afp"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("afp"), 16 * b).bitwiseAND(lit(65535L))): _*))
-        .as(Seq("band", "bkey")))
-      .localCheckpoint(false)
+        .as(Seq("band", "bkey"))))
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1030,8 +1026,9 @@ object EmbedQueries {
     val blobs = graft.functions.Multimodal
       .documentsAsVideoBlobsWithReexports(spark, dir)
     graft.Artifacts(blobs.toDF(), "frame-hashes")(
-      graft.functions.Multimodal.videoFrameHashes(blobs).toDF()
-        .localCheckpoint())
+      cut("videoFrameHashTable",
+        graft.functions.Multimodal.videoFrameHashes(blobs).toDF(),
+        eager = true))
   }
 
   /** The banded candidate + frame-overlap verify stage of q129 over any
@@ -1056,18 +1053,18 @@ object EmbedQueries {
     // the pigeonhole argument lives at the frame-pair level (≤ 3
     // errors cannot touch all 4 bands), which is precisely the set this
     // computes (MultimodalSpec's banded ≡ exhaustive proof re-certifies).
-    val sizes = fh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+    val sizes = cut("videoPhashPairs.sizes",
+      fh.groupBy("doc_id").agg(count(lit(1)).as("n")))
     val mult = fh.groupBy("doc_id", "fhash").agg(count(lit(1)).as("m"))
     // Distinct hashes per video (repeated identical frames add no
     // candidate information but multiply collision fanout — the r15
     // lever), each with its 4 band keys; both self-join sides read it.
-    val bands = fh.select(col("doc_id"), col("fhash")).distinct()
-      .select(col("doc_id"), col("fhash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("fhash"), 15 * b).bitwiseAND(lit(32767L))): _*))
-          .as(Seq("band", "bkey")))
-      .localCheckpoint(false)
+    val bands = cut("videoPhashPairs.bands",
+      fh.select(col("doc_id"), col("fhash")).distinct()
+        .select(col("doc_id"), col("fhash"),
+          posexplode(array((0 until 4).map(b =>
+            shiftright(col("fhash"), 15 * b).bitwiseAND(lit(32767L))): _*))
+            .as(Seq("band", "bkey"))))
     val fpairs = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1221,10 +1218,10 @@ object EmbedQueries {
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("s"), col("cid").as("code"))
     val lut = sub.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("s"), col("cid"), col("d_um"))
+      .select(col("vec_id").as("q_id"), col("s").as("ls"), col("cid"),
+        col("d_um"))
     val adc = codes
-      .join(broadcast(lut),
-        codes("s") === lut("s") && codes("code") === lut("cid"))
+      .join(broadcast(lut), col("s") === col("ls") && col("code") === col("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d_um")).as("adc_um"))
@@ -1400,15 +1397,14 @@ object EmbedQueries {
         col("nrm").as("qnrm"))
     val wRel = Window.partitionBy(col("q_id"))
       .orderBy(desc("rel"), asc("vec_id"))
-    val sl = emb.crossJoin(broadcast(queries))
+    val sl = cut("mmrDiversifiedTopk.sl", emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("embedding"), col("nrm"),
         round(dot(col("qv"), col("embedding")) /
           (col("qnrm") * col("nrm")), 6).as("rel"))
       .withColumn("rn", row_number().over(wRel))
       .filter(col("rn") <= shortlist)
-      .select("q_id", "vec_id", "embedding", "nrm", "rel")
-      .localCheckpoint(false)
+      .select("q_id", "vec_id", "embedding", "nrm", "rel"))
     // Candidate–candidate sims within each query's shortlist, built once:
     // queries × shortlist² rows, group-bounded by construction. Consumed
     // exactly once (the per-query sim-map collect), so no lineage cut.
@@ -1644,7 +1640,8 @@ object EmbedQueries {
       when(d >= 0, floor(d + 0.5d)).otherwise(-floor(-d + 0.5d))
         .cast("long")
     })
-    val qc = emb.select(col("vec_id"), qe.as("qe")).localCheckpoint()
+    val qc = cut("kmeansIntStats.qc",
+      emb.select(col("vec_id"), qe.as("qe")), eager = true)
     val dist = aggregate(
       zip_with(col("qe"), col("cv"), (a, b) => (a - b) * (a - b)),
       lit(0L), (acc, v) => acc + v)
@@ -1673,10 +1670,11 @@ object EmbedQueries {
         .groupBy("cid")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("cv_new"))
-      cents = cents.select(col("cid"), col("cv").as("cv_old"))
-        .join(upd, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cv_new"), col("cv_old")).as("cv"))
-        .localCheckpoint()
+      cents = cut("kmeansIntStats.cents",
+        cents.select(col("cid"), col("cv").as("cv_old"))
+          .join(upd, Seq("cid"), "left")
+          .select(col("cid"), coalesce(col("cv_new"), col("cv_old")).as("cv")),
+        eager = true)
     }
     assign(cents)
       .groupBy("cid")
@@ -1955,8 +1953,9 @@ object EmbedQueries {
     withDot(embIn.sparkSession)
     val spark = embIn.sparkSession
     import spark.implicits._
-    val emb = embIn.select(col("vec_id"), col("embedding"),
-      l2(col("embedding")).as("nrm")).localCheckpoint()
+    val emb = cut("kcenterGreedy.emb",
+      embIn.select(col("vec_id"), col("embedding"),
+        l2(col("embedding")).as("nrm")), eager = true)
     def distTo(cVec: Array[Float], cNrm: Double): Column =
       lit(1000000L) - round(dot(col("embedding"), typedlit(cVec)) /
         (col("nrm") * lit(cNrm)) * 1e6).cast("long")
@@ -1966,7 +1965,8 @@ object EmbedQueries {
     // round 1: the deterministic seed is the smallest vec_id
     var (cId, cVec, cNrm) = centerOf(
       emb.orderBy("vec_id").limit(1).collect()(0))
-    var cur = emb.withColumn("d", distTo(cVec, cNrm)).localCheckpoint()
+    var cur = cut("kcenterGreedy.cur",
+      emb.withColumn("d", distTo(cVec, cNrm)), eager = true)
     for (r <- 2 to k) {
       // next center = the vector farthest from its nearest chosen
       // center (1-row argmax; chosen centers sit at d = 0 and can
@@ -1979,8 +1979,8 @@ object EmbedQueries {
       rows += (((r - 1).toLong, cId, top.getLong(3)))
       val pick = centerOf(top)
       cId = pick._1; cVec = pick._2; cNrm = pick._3
-      cur = cur.withColumn("d", least(col("d"), distTo(cVec, cNrm)))
-        .localCheckpoint()
+      cur = cut("kcenterGreedy.cur",
+        cur.withColumn("d", least(col("d"), distTo(cVec, cNrm))), eager = true)
     }
     // round k has no successor pick to ride — one final 1-row max
     rows += ((k.toLong, cId, cur.agg(max("d")).collect()(0).getLong(0)))
@@ -2153,12 +2153,14 @@ object EmbedQueries {
   def knnRefineConverged(graph: DataFrame, embIn: DataFrame, kNbrs: Int,
                          maxRounds: Int): DataFrame = {
     require(maxRounds >= 1)
-    var prev = graph.select(col("vec_id"), col("nbr_id"), col("rank"),
-      col("cos_u")).localCheckpoint()
+    var prev = cut("knnRefineConverged.prev",
+      graph.select(col("vec_id"), col("nbr_id"), col("rank"),
+        col("cos_u")), eager = true)
     var rounds = 0
     var changed = Long.MaxValue
     while (rounds < maxRounds && changed > 0) {
-      val next = knnRefineTagged(prev, embIn, kNbrs).localCheckpoint()
+      val next = cut("knnRefineConverged.next",
+        knnRefineTagged(prev, embIn, kNbrs), eager = true)
       // edge-set delta: both sides hold exactly k edges per vector, so
       // |next ∖ prev| = 0 ⟺ the sets are equal (the fixpoint test).
       // The `was` flag carried through the round makes it a map-only

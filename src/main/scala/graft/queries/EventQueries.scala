@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.core._
+import graft.Cut.cut
 import graft.sources.Tables
 
 /** Event-table queries: JSON extraction and the batch form of the streaming
@@ -460,22 +461,23 @@ object EventQueries {
     // full history window pass, re-run 3×; in production it is a stored
     // table, which is exactly what the cut mirrors). Lazy lineage cuts
     // evaluate each once (r20, guide §1.2).
-    val standingC = standing.localCheckpoint(false)
-    val touched = batch.select(col(key)).distinct().localCheckpoint(false)
-    val open = standingC.filter(col("is_current")).join(touched, Seq(key))
-      .localCheckpoint(false)
+    val standingC = cut("scd2Incremental.standingC", standing)
+    val touched = cut("scd2Incremental.touched",
+      batch.select(col(key)).distinct())
+    val open = cut("scd2Incremental.open",
+      standingC.filter(col("is_current")).join(touched, Seq(key)))
     val wOrd = Window.partitionBy(key).orderBy(col("ts"), col("event_id"))
     // batch change chain: the first row's `prev` is the open version's
     // state (null for a brand-new entity — then the first row is a
     // change by the same rule scd2 applies to a first-ever event)
-    val changes = batch
+    // cut: feeds newRows AND the close-ts aggregate
+    val changes = cut("scd2Incremental.changes", batch
       .select(col(key), col("ts"), col("event_id"), col(state).as("state"))
       .withColumn("lagst", lag(col("state"), 1).over(wOrd))
       .join(open.select(col(key), col("state").as("open_state"),
         col("version").as("open_version")), Seq(key), "left")
       .withColumn("prev", coalesce(col("lagst"), col("open_state")))
-      .filter(col("prev").isNull || col("prev") =!= col("state"))
-      .localCheckpoint(false) // feeds newRows AND the close-ts aggregate
+      .filter(col("prev").isNull || col("prev") =!= col("state")))
     val newRows = changes
       .withColumn("valid_to", coalesce(lead(col("ts"), 1).over(wOrd), hwm))
       .withColumn("version",
@@ -536,12 +538,11 @@ object EventQueries {
     // weeks feeds the cohort derivation AND the activity join, cohorts
     // feeds the size table AND the join — uncut, the corpus-sized
     // (user, week) distinct re-ran per reference (r20, guide §1.2).
-    val weeks = events
+    val weeks = cut("retentionCohorts.weeks", events
       .select(col("user_id"), date_trunc("week", col("ts")).as("week"))
-      .distinct()
-      .localCheckpoint(false)
-    val cohorts = weeks.groupBy("user_id").agg(min("week").as("cohort"))
-      .localCheckpoint(false)
+      .distinct())
+    val cohorts = cut("retentionCohorts.cohorts",
+      weeks.groupBy("user_id").agg(min("week").as("cohort")))
     val sizes = cohorts.groupBy("cohort")
       .agg(count(lit(1)).as("cohort_users"))
     weeks.join(cohorts, "user_id")

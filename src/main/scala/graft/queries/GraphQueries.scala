@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Cut.cut
 import graft.sources.Tables
 
 /** Iterative graph algorithms beyond connected components (q79's
@@ -96,16 +97,16 @@ object GraphQueries {
     // [[graft.Artifacts]]; lazily cut so materialization rides the first
     // consumer's job.
     graft.Artifacts(li, "co-supply") {
-      val half = li.groupBy("ok").agg(collect_set(col("sk")).as("sks"))
-        .select(explode(col("sks")).as("src"), col("sks"))
-        .select(col("src"), explode(col("sks")).as("dst"))
-        .filter(col("src") < col("dst"))
-        .select("src", "dst").distinct()
-        .localCheckpoint(false) // feeds both union arms
+      val half = cut("coSupplyGraph.half", // feeds both union arms
+        li.groupBy("ok").agg(collect_set(col("sk")).as("sks"))
+          .select(explode(col("sks")).as("src"), col("sks"))
+          .select(col("src"), explode(col("sks")).as("dst"))
+          .filter(col("src") < col("dst"))
+          .select("src", "dst").distinct())
       val edges = half
         .union(half.select(col("dst").as("src"), col("src").as("dst")))
       val nodes = li.select(col("sk").as("node")).distinct()
-      (edges.localCheckpoint(false), nodes.localCheckpoint(false))
+      (cut("coSupplyGraph.edges", edges), cut("coSupplyGraph.nodes", nodes))
     }
   }
 
@@ -141,7 +142,7 @@ object GraphQueries {
       // The LAST round stays unmaterialized so the returned plan is one
       // round's auditable shape (PlanPinsSpec / PLANS.md read it).
       r = prRound(st, r)
-      if (i < iters) r = r.localCheckpoint()
+      if (i < iters) r = cut("pageRankSeeded.r", r, eager = true)
     }
     r.select(col("node"), col("r").as("rank_ppb"))
   }
@@ -163,7 +164,7 @@ object GraphQueries {
                               maxIters: Int): DataFrame = {
     require(epsPpb >= 0 && maxIters >= 1)
     val st = prInit(edgesIn, nodesIn, seedsIn)
-    var rPrev = prStart(st).localCheckpoint()
+    var rPrev = cut("pageRankSeededConverged.rPrev", prStart(st), eager = true)
     var rBase = rPrev // r_{k-1}: the final round is re-derived from it
     var rounds = 0
     var delta = Long.MaxValue
@@ -174,7 +175,8 @@ object GraphQueries {
       // the r19 CC convergence-count move (guide §2.4: the old shape
       // re-joined rNext to rPrev on node per round). r_prev is dropped
       // before the next round so the checkpoint blocks stay narrow.
-      val rNext = prRound(st, rPrev, carryPrev = true).localCheckpoint()
+      val rNext = cut("pageRankSeededConverged.rNext",
+        prRound(st, rPrev, carryPrev = true), eager = true)
       delta = rNext
         .agg(coalesce(sum(abs(col("r") - col("r_prev"))), lit(0L)))
         .collect()(0).getLong(0)
@@ -211,17 +213,16 @@ object GraphQueries {
 
   private def prInit(edgesIn: DataFrame, nodesIn: DataFrame,
                      seedsIn: DataFrame): PrState = {
-    val edges = edgesIn.localCheckpoint()
+    val edges = cut("prInit.edges", edgesIn, eager = true)
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val flagged = nodesIn.select(col("node")).distinct()
+    val flagged = cut("prInit.flagged", nodesIn.select(col("node")).distinct()
       .join(seedsIn.select(col("node")).distinct()
           .withColumn("is_seed", lit(1L)),
         Seq("node"), "left")
       .join(outdeg.select(col("src").as("node"), col("deg")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"),
-        coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint()
+        coalesce(col("deg"), lit(0L)).as("deg")), eager = true)
     val ns = flagged.agg(coalesce(sum("is_seed"), lit(0L)))
       .collect()(0).getLong(0)
     PrState(edges, flagged, ns)

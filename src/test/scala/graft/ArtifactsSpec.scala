@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,23 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ArtifactsSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
 
-  /** A small corpus of the two tables q134 and q79 read: suppliers
-    * sharing orders, and documents with planted near-duplicates. */
-  private lazy val dataDir: String = {
-    val s = spark
-    import s.implicits._
-    val dir = "target/artifacts-spec"
-    (1L to 40L).flatMap(o => Seq(o -> (o % 7), o -> ((o * 3) % 11)))
-      .toDF("l_orderkey", "l_suppkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val words = (1 to 30).map(i => s"w$i")
-    (1L to 60L).map { id =>
-      val text = words.drop((id % 20).toInt).take(12).mkString(" ")
-      (id, text, "en", s"src${id % 3}", text.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
+  private lazy val dataDir = ArtifactsSpec.smallCorpus(spark, "target/artifacts-spec")
 
   test("8 threads racing for one key run the build exactly once") {
     val input = spark.range(3).toDF()
@@ -99,5 +83,24 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(spark.sparkContext.applicationId != old)
     assert(touch() == 2)
     assert(Artifacts.held.map(_._1) == Seq("per-context"))
+  }
+}
+
+object ArtifactsSpec {
+  /** Writes a small corpus of the two tables q134 and q79 read under
+    * `dir`: suppliers sharing orders, and documents with planted
+    * near-duplicates. Returns `dir`. */
+  def smallCorpus(spark: SparkSession, dir: String): String = {
+    import spark.implicits._
+    (1L to 40L).flatMap(o => Seq(o -> (o % 7), o -> ((o * 3) % 11)))
+      .toDF("l_orderkey", "l_suppkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val words = (1 to 30).map(i => s"w$i")
+    (1L to 60L).map { id =>
+      val text = words.drop((id % 20).toInt).take(12).mkString(" ")
+      (id, text, "en", s"src${id % 3}", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
   }
 }

@@ -69,26 +69,6 @@ class DedupClustersSpec extends AnyFunSuite {
     }
   }
 
-  test("reliable-checkpoint mode returns the same assignment as local") {
-    // checkpointDir = Some(dir) swaps the per-round lineage cut from
-    // executor-memory localCheckpoint to reliable checkpoint files — the
-    // executor-loss-safe mode a real cluster needs. Result must be
-    // identical; only the durability of intermediate state differs.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cc-ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (5L, 6L))
-      .toDF("doc_a", "doc_b")
-    val local = DocQueries.dedupClusters(pairs)
-      .as[(Long, Long, Long, Boolean)].collect().toSet
-    val reliable = DocQueries.dedupClusters(pairs, Some(dir))
-      .as[(Long, Long, Long, Boolean)].collect().toSet
-    assert(reliable == local)
-    // reliable mode actually wrote checkpoint state to the directory
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, "reliable mode wrote no checkpoint files")
-  }
-
   test("q101 semdedupClusters maps the embedding pair frame onto the same assignment") {
     // The wrapper's whole job is column mapping (vec_* in, vec_id out)
     // around the proven dedupClusters — pin it on a two-component graph.

@@ -67,27 +67,38 @@ object UpsertRecoveryPropsSpec extends Properties("EventStreams.upsertStore") {
     dir
   }
 
+  /** `check` on a store materialized from `history`; the store is deleted
+    * once the check has run. */
+  private def withStore(history: List[(Rows, Boolean)])(
+      check: String => Boolean): Boolean = {
+    val dir = writeStore(history)
+    try check(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   property("resume read = newest committed version; torn versions invisible") =
     forAll(historyGen) { history =>
-      val dir = writeStore(history)
-      val expected = history.zipWithIndex.collect {
-        case ((rows, true), _) => rows
-      }.lastOption.map(_.toSet)
-      val got = EventStreams.readUpsertStore(spark, dir).map(collect)
-      got == expected
+      withStore(history) { dir =>
+        val expected = history.zipWithIndex.collect {
+          case ((rows, true), _) => rows
+        }.lastOption.map(_.toSet)
+        val got = EventStreams.readUpsertStore(spark, dir).map(collect)
+        got == expected
+      }
     }
 
   property("kill between writes, resume, merge: last-committed-wins end-to-end") =
     forAll(Gen.zip(historyGen, rowsGen)) { case (history, batch) =>
-      val dir = writeStore(history)
-      // the resumed micro-batch: merge onto whatever the store recovers to
-      val base = EventStreams.readUpsertStore(spark, dir)
-        .getOrElse(df(batch).limit(0))
-      val resumed = collect(EventStreams.upsertMerge(base, df(batch), "event_type"))
-      val committed = history.collect { case (rows, true) => rows }
-        .lastOption.getOrElse(Nil)
-      val expected = collect(
-        EventStreams.upsertMerge(df(committed), df(batch), "event_type"))
-      resumed == expected
+      withStore(history) { dir =>
+        // the resumed micro-batch: merge onto whatever the store recovers to
+        val base = EventStreams.readUpsertStore(spark, dir)
+          .getOrElse(df(batch).limit(0))
+        val resumed = collect(EventStreams.upsertMerge(base, df(batch), "event_type"))
+        val committed = history.collect { case (rows, true) => rows }
+          .lastOption.getOrElse(Nil)
+        val expected = collect(
+          EventStreams.upsertMerge(df(committed), df(batch), "event_type"))
+        resumed == expected
+      }
     }
 }
