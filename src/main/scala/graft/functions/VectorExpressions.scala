@@ -243,10 +243,12 @@ case class LshBucketFloat(vec: Expression, planes: Expression)
 /** Count of DISTINCT values present in BOTH sorted long arrays — exactly
   * `size(array_intersect(a, b))` for ascending-sorted inputs, without
   * materializing the intersection: `array_intersect` builds a hash set
-  * and an output array PER CALL, and q66's verify join evaluates it once
-  * per candidate pair (15.6 M pairs at ×30 in SCALE.md's sf0.1 record —
-  * the allocation cost center of the whole containment family; cf.
-  * `DocQueries.containmentJoinToks`). This is the classic merge-style
+  * and an output array PER CALL, and a verify join evaluates it once
+  * per candidate pair (15.6 M pairs for q66 at ×30 in SCALE.md's sf0.1
+  * record — the allocation cost center of the whole containment family).
+  * Every near-dup verify counts with it: q66's containment
+  * (`DocQueries.containmentJoinToks`) and the Jaccard verifies of q25/q79,
+  * q74 and q87 (`DocQueries.withOverlapUnion`). This is the classic merge-style
   * two-pointer count: one pass, zero allocation, duplicate values
   * counted once (matching array_intersect's distinct semantics — the
   * 56-bit shingle hashes can collide, so duplicates are possible).

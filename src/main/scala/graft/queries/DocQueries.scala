@@ -199,9 +199,10 @@ object DocQueries {
     * ≥ 0.7 on the candidate pairs only.
     *
     * At 100 TB the only shuffles are the band-key join (fixed 65-byte keys)
-    * and the two hash joins that re-attach shingle sets for verification;
-    * candidate count is bounded by true near-dups + banding false positives,
-    * never O(n²). */
+    * and the two hash joins that re-attach the sorted shingle-hash arrays
+    * for verification (8-byte elements, never shingle strings); candidate
+    * count is bounded by true near-dups + banding false positives, never
+    * O(n²). */
   def q25DocsMinhashNeardup(spark: SparkSession, dir: String): DataFrame =
     minhashNeardupToks(
       tokenizedDocs(Tables(spark, dir, "documents")), 0.7)
@@ -217,10 +218,14 @@ object DocQueries {
     minhashNeardupToks(
       docs.select(col("doc_id"), toks(col("text")).as("toks")), threshold)
 
-  /** The shingled+hashed table (doc_id, sh, hs), persisted once: it feeds
+  /** The shingled+hashed table (doc_id, hs), persisted once: it feeds
     * three consumers (band explode + both sides of the Jaccard verify
     * join) and at cluster scale is the checkpoint you'd always
     * materialize rather than re-shingling the corpus per consumer.
+    * Only the 56-bit md5-derived hash of each distinct shingle is
+    * stored; the shingle strings are a transient step before hashing
+    * (cached beside their hashes they would make the relation about
+    * four times larger, and every verify reads the hashes only).
     * `hs` is stored SORTED ascending — one sort per document here buys
     * (a) map-only prefix extraction in q66's hash-order candidate path
     * (a plain `slice`, no per-row re-sort) and (b) the `graft_overlap`
@@ -231,10 +236,13 @@ object DocQueries {
     * by [[graft.Artifacts.clear]]. */
   private def shingledHashed(tokDf: DataFrame): DataFrame =
     memoShared(tokDf, "shingled") {
+      // size(toks) >= 3 ⟺ a non-empty shingle set. A filter on the
+      // shingle array itself is pushed below this projection and builds
+      // every document's shingles twice.
       tokDf
-        .select(col("doc_id"), shingles(col("toks")).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("hs", array_sort(transform(col("sh"), x => md5Long(x, 14))))
+        .filter(size(col("toks")) >= 3)
+        .select(col("doc_id"), array_sort(transform(shingles(col("toks")),
+          x => md5Long(x, 14))).as("hs"))
     }
 
   /** The banded candidate pairs BEFORE the exact-Jaccard verify — the
@@ -270,18 +278,35 @@ object DocQueries {
 
   /** Same operator over an already-tokenized (doc_id, ..., toks) frame —
     * the form the registered queries use so the whole doc family shares
-    * one tokenized InMemoryRelation. */
+    * one tokenized InMemoryRelation and one shingle table.
+    *
+    * The verify re-attaches the sorted hash arrays and counts the
+    * intersection with `graft_overlap` ([[withOverlapUnion]]). Equal
+    * shingles hash equal, so the hash Jaccard equals the string Jaccard
+    * unless two DISTINCT shingles of one pair collide in 56 bits
+    * (~2⁻⁵⁶·|A|·|B|, q66/q87's argument). The cut is on the ROUNDED
+    * value, as the q25 oracle states it (round to 4 places, then
+    * ≥ threshold) — unlike q66/q87/q74, which cut unrounded. */
   private def minhashNeardupToks(tokDf: DataFrame, threshold: Double): DataFrame = {
     val withHs = shingledHashed(tokDf)
-    val docsSh = withHs.select("doc_id", "sh")
-    candPairs(withHs)
-      .join(docsSh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      .join(docsSh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+    withOverlapUnion(candPairs(withHs)
+      .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
+      .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        round(size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb"))), 4).as("jaccard"))
+        round(col("ov").cast("double") / col("uni"), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_a", "doc_b")
+  }
+
+  /** Adds `ov` = |A∩B|, the `graft_overlap` two-pointer count over the
+    * re-attached sorted hash arrays `ha` and `hb`, and `uni` = |A∪B| =
+    * |A| + |B| − ov (one hash per distinct shingle in each array). The one
+    * near-dup verify kernel behind q25/q79, q74 and q87. */
+  private def withOverlapUnion(pairs: DataFrame): DataFrame = {
+    graft.functions.VectorExpressions.register(pairs.sparkSession)
+    pairs
+      .withColumn("ov", call_function("graft_overlap", col("ha"), col("hb")))
+      .withColumn("uni", size(col("ha")) + size(col("hb")) - col("ov"))
   }
 
   /** Deterministic STRATIFIED SAMPLING (q49) — the training-mix knob every
@@ -656,17 +681,18 @@ object DocQueries {
     // Near-dup: corpus bands scanned map-only against broadcast delta
     // bands; candidates are (delta, corpus) pairs bounded by real band
     // collisions. Verification broadcast-prunes each store side to the
-    // candidate set before the Jaccard arithmetic runs.
+    // candidate set, re-attaching the sorted hash arrays, and cuts the
+    // UNROUNDED graft_overlap Jaccard (q25's hash-equals-string argument).
     val cand = bandsOf(corpusHs).withColumnRenamed("doc_id", "doc_b")
       .join(broadcast(bandsOf(deltaHs).withColumnRenamed("doc_id", "doc_a")),
         "band_key")
       .select("doc_a", "doc_b").distinct()
-    val candB = corpusHs.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
+    val candB = corpusHs.select(col("doc_id").as("doc_b"), col("hs").as("hb"))
       .join(broadcast(cand), "doc_b")
-    val nearDup = deltaHs.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-      .join(broadcast(candB), "doc_a")
-      .filter(size(array_intersect(col("sha"), col("shb"))).cast("double") /
-        size(array_union(col("sha"), col("shb"))) >= jaccardT)
+    val nearDup = withOverlapUnion(
+      deltaHs.select(col("doc_id").as("doc_a"), col("hs").as("ha"))
+        .join(broadcast(candB), "doc_a"))
+      .filter(col("ov").cast("double") / col("uni") >= jaccardT)
       .select(col("doc_a").as("doc_id")).distinct()
 
     // Contamination: the corpus' distinct shingle-hash store (fixed-width
@@ -1515,10 +1541,9 @@ object DocQueries {
     // ~20k distinct shingles, silently voiding the exact-recall proof in
     // that hairline band. The oracle applies the same unrounded cut.
     graft.functions.VectorExpressions.register(tokDf.sparkSession)
-    val docsHs = withHs.select("doc_id", "hs")
     containmentCandidatesToks(withHs, t)
-      .join(docsHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
-      .join(docsHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
+      .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
+      .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         (call_function("graft_overlap", col("ha"), col("hb")).cast("double") /
           size(col("ha"))).as("c_raw"))
@@ -1571,17 +1596,12 @@ object DocQueries {
       .distinct()
 
   private def jaccardJoinToks(tokDf: DataFrame, t: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(tokDf.sparkSession)
     val withHs = shingledHashed(tokDf)
-    val docsHs = withHs.select("doc_id", "hs")
-    val cand = jaccardCandidatesToks(withHs, t)
-    cand
-      .join(docsHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
-      .join(docsHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
+    withOverlapUnion(jaccardCandidatesToks(withHs, t)
+      .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
+      .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
       .filter(size(col("hb")).cast("double") >= lit(t) * size(col("ha")) &&
-        size(col("ha")).cast("double") >= lit(t) * size(col("hb")))
-      .withColumn("ov", call_function("graft_overlap", col("ha"), col("hb")))
-      .withColumn("uni", size(col("ha")) + size(col("hb")) - col("ov"))
+        size(col("ha")).cast("double") >= lit(t) * size(col("hb"))))
       .filter(col("ov").cast("double") / col("uni") >= t)
       .select(col("doc_a"), col("doc_b"),
         col("ov").as("shared_ngrams"), col("uni").as("union_ngrams"),
@@ -4399,15 +4419,26 @@ object DocQueries {
     * split table is (doc_id, split) — fixed width) and a 6-row census.
     * All within-split pairs appear too (is_leak = 0): the same audit
     * doubles as the dedup-debt census per split. */
-  def q161SplitLeakageAudit(spark: SparkSession, dir: String): DataFrame =
-    splitLeakageAudit(Tables(spark, dir, "documents"), 0.7, 90, 95)
+  def q161SplitLeakageAudit(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir, "documents")
+    splitLeakageCensus(docs,
+      minhashNeardupToks(tokenizedDocs(docs), 0.7), 90, 95)
+  }
 
   /** The reusable audit behind q161 over any (doc_id, text) frame;
     * public so SplitLeakageSpec can plant a cross-split twin. */
   def splitLeakageAudit(docs: DataFrame, threshold: Double,
-                        trainPct: Int, valPct: Int): DataFrame = {
-    val pairs = minhashNeardup(docs.select(col("doc_id"), col("text")),
-      threshold)
+                        trainPct: Int, valPct: Int): DataFrame =
+    splitLeakageCensus(docs,
+      minhashNeardup(docs.select(col("doc_id"), col("text")), threshold),
+      trainPct, valPct)
+
+  /** The census over verified (doc_a, doc_b) pairs. The registered q161
+    * passes q25's pairs over the session-shared tokenized corpus, so it
+    * reads the same shingle table as q25 instead of tokenizing and
+    * shingling the corpus again under a second memo key. */
+  private def splitLeakageCensus(docs: DataFrame, pairs: DataFrame,
+                                 trainPct: Int, valPct: Int): DataFrame = {
     val splits = splitAssign(docs, trainPct, valPct)
       .select(col("doc_id"), col("split"))
     pairs

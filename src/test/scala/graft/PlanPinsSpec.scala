@@ -468,6 +468,36 @@ class PlanPinsSpec extends AnyFunSuite {
       s"hash-order candidates must not build a shingle-DF table:\n$plan")
   }
 
+  test("q25/q74: verify re-attaches hash arrays — no string array crosses a join or exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayUnion}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    Artifacts.clear(spark)
+    for (q <- Seq("q25_docs_minhash_neardup", "q74_incremental_dedup")) {
+      val nodes = PlanAudit.collectAll(PlanAudit.physical(
+        SparkEntry.queries(q)(spark, sfDir)))
+      // The verify counts |A∩B| with graft_overlap over the sorted hash
+      // arrays; a hash-set intersect/union per candidate pair means the
+      // string verify crept back in.
+      val setOps = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case e: ArrayIntersect => e
+        case e: ArrayUnion => e
+      }))
+      assert(setOps.isEmpty, s"$q verifies with array set ops $setOps:\n${nodes.head.treeString}")
+      // Every exchange carries ids, band keys or 8-byte hash arrays —
+      // never the shingle strings (nor the token arrays).
+      val stringExchanges = nodes.filter {
+        case _: ShuffleExchangeExec | _: BroadcastExchangeExec => true
+        case _ => false
+      }.filter(_.output.exists(_.dataType match {
+        case ArrayType(StringType, _) => true
+        case _ => false
+      }))
+      assert(stringExchanges.isEmpty,
+        s"$q moves string arrays through ${stringExchanges.map(_.output)}:\n${nodes.head.treeString}")
+    }
+  }
+
   test("q88: PMI shuffles keyed counts only — token arrays never cross an exchange") {
     Artifacts.clear(spark)
     val plan = SparkEntry.queries("q88_pmi_collocations")(spark, sfDir)
