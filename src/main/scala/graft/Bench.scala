@@ -8,9 +8,10 @@ package graft
   * letting Catalyst prune work the way `.count()` would, and without the
   * driver-side cost of `collect()`.
   *
-  * A separate untimed warmup pass first materializes the shared input
-  * persists (graft.sources.Tables hot set) and JIT-warms the session, so the
-  * per-query timings measure query cost, not first-touch scan cost. The
+  * A separate untimed warmup pass first reads every input through
+  * graft.sources.Tables (resolving the memoized scans and persisting the
+  * repartitioned documents and embeddings) and JIT-warms the session, so
+  * the per-query timings measure query cost, not first-touch cost. The
   * warmup wall time is reported in its own field for transparency.
   *
   * Contention hygiene (round-3 postmortem: back-to-back repeats let one
@@ -131,7 +132,7 @@ object Bench {
         .split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
 
-    // Untimed warmup: touch every hot input through the Tables cache.
+    // Untimed warmup: read every input once through Tables.
     val w0 = System.nanoTime()
     graft.sources.Tables.all.foreach { t =>
       try materialize(graft.sources.Tables(spark, sfDir, t))

@@ -171,7 +171,7 @@ object StreamQueries {
         col("purchase_ts") > col("view_ts") &&
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"))
       .select(col("view_id"), col("purchase_id"), col("user_id"))
-    EventStreams.runToMemory(ss, joined)
+    EventStreams.runToMemory(spark, joined)
       .orderBy("view_id", "purchase_id")
   }
 
@@ -207,7 +207,7 @@ object StreamQueries {
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"),
       "left_outer")
       .select(col("view_id"), col("purchase_id"), col("user_id"), col("view_ts"))
-    val sink = EventStreams.runToMemory(ss, joined)
+    val sink = EventStreams.runToMemory(spark, joined)
     val wm = EventStreams.normalize(Tables(spark, dir, "events"))
       .agg(least(
         max(when(col("event_type") === "view", col("ts"))),

@@ -12,10 +12,15 @@ import scala.collection.concurrent.TrieMap
   * file — /root/reference/orchestration/src/transform.py:52) and parquet globs
   * (batch_process.py:243). Here every read goes through one place so that:
   *   - schemas are explicit where the format needs it (CSV),
-  *   - the big fact tables are persisted once per (session, dir) when many
-  *     queries share a scan (the reference re-scans parquet for each of its
-  *     9 queries — batch_process.py:243-253),
-  *   - at cluster scale the cache is a no-op knob (`spark.graft.cacheInputs=
+  *   - each fact table is resolved once per (session, dir): the memoized
+  *     frame is a plain parquet scan, so later reads skip the one-task
+  *     schema-inference job `spark.read.parquet` runs, and every query
+  *     still scans the columnar file with pushdown, as the reference does
+  *     for each of its 9 queries (batch_process.py:243-253),
+  *   - only the tables that are re-laid out across the session's cores are
+  *     persisted: an in-memory copy of a file-order table is worth no more
+  *     than the single-split scan it replaces,
+  *   - at cluster scale the memo is a no-op knob (`spark.graft.cacheInputs=
   *     false`) and plans fall back to pure parquet scans with pushdown.
   */
 object Tables {
@@ -24,13 +29,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables worth persisting across the multi-query batch runs. Dimensions
-    * are small enough that a broadcast re-read is cheap. */
+  /** Tables memoized across the multi-query batch runs, so each is
+    * resolved (one schema inference) once per session. Dimensions are
+    * small enough that a re-read is cheap. Only the [[spread]] ones are
+    * persisted. */
   private val hot = Set("lineitem", "orders", "events", "documents", "embeddings")
 
-  /** Hot tables whose cached relation is additionally spread across the
-    * session's parallelism. Only tables whose consumers are FLOAT-ORDER
-    * INSENSITIVE qualify: repartitioning reorders rows, and a double
+  /** Hot tables that are spread across the session's parallelism and
+    * persisted, so the repartition's shuffle runs once, not on every
+    * read. Only tables whose consumers are FLOAT-ORDER INSENSITIVE
+    * qualify: repartitioning reorders rows, and a double
     * sum/avg aggregated in a different order can flip a 4-decimal
     * rounding against the (sequential) DuckDB oracle. The embedding
     * family hashes, counts and compares per row; the doc family's one
@@ -50,17 +58,36 @@ object Tables {
   private val spread = Map("documents" -> 1000L, "embeddings" -> 1000L)
 
   private val cache = TrieMap.empty[(String, String, String), DataFrame]
+  @volatile private var app = ""
 
-  /** Load `<dir>/<name>.parquet`, persisted if hot and caching enabled.
+  /** `spark`'s application id, after dropping every other id's entries.
+    * Their context is stopped, so there is nothing left to unpersist; the
+    * entries would only keep the stopped session reachable. */
+  private def live(spark: SparkSession): String = {
+    val id = spark.sparkContext.applicationId
+    if (id != app) synchronized {
+      if (id != app) {
+        cache.keys.filter(_._1 != id).foreach(cache.remove)
+        app = id
+      }
+    }
+    id
+  }
+
+  /** Load `<dir>/<name>.parquet`, memoized per (session, dir) if hot and
+    * caching enabled. The memo buys one schema inference per table: every
+    * `spark.read.parquet` otherwise runs a one-task job to read the
+    * footer. A file-order table stays an unpersisted scan, so its reads
+    * keep file order and pushdown.
     *
-    * [[spread]] tables are REPARTITIONED at build time: the testdata
-    * tables are single parquet files with one row group, which Spark
-    * cannot split — so without this, every narrow pass downstream (the
-    * doc family's tokenize/annotate stages) runs as ONE task no matter
-    * how many cores the session has (measured: q47's annotation pass went
-    * superlinear on the ×30 amplified corpus purely from this). The
-    * partition count SCALES WITH THE TABLE — one partition per ~1000 rows,
-    * capped at the session parallelism — because the fix must not
+    * [[spread]] tables are REPARTITIONED and persisted at build time: the
+    * testdata tables are single parquet files with one row group, which
+    * Spark cannot split — so without this, every narrow pass downstream
+    * (the doc family's tokenize/annotate stages) runs as ONE task no
+    * matter how many cores the session has (measured: q47's annotation
+    * pass went superlinear on the ×30 amplified corpus purely from this).
+    * The partition count SCALES WITH THE TABLE — one partition per ~1000
+    * rows, capped at the session parallelism — because the fix must not
     * overshoot the other way: unconditionally fanning a 2000-row table
     * out to 32 partitions made every downstream stage scheduler-overhead-
     * dominated at sf0.1 (the round-5 q20/q46 slowdowns: 32 tasks × ~60
@@ -72,9 +99,9 @@ object Tables {
     val cachingOn =
       !spark.conf.getOption("spark.graft.cacheInputs").contains("false")
     if (cachingOn && hot(name)) {
-      cache.getOrElseUpdate((spark.sparkContext.applicationId, dir, name), {
+      cache.getOrElseUpdate((live(spark), dir, name), {
         val df = read(spark, dir, name)
-        val laidOut = spread.get(name) match {
+        spread.get(name) match {
           case Some(rowsPerPartition) =>
             // Floor at 2, never 1: repartition(1) reports SinglePartition
             // once materialized, which satisfies EVERY clustered
@@ -86,19 +113,21 @@ object Tables {
             val target = math.min(
               spark.sparkContext.defaultParallelism.toLong,
               math.max(2L, df.count() / rowsPerPartition)).toInt
-            df.repartition(target)
+            df.repartition(target).persist(StorageLevel.MEMORY_AND_DISK)
           case None => df
         }
-        laidOut.persist(StorageLevel.MEMORY_AND_DISK)
       })
     } else read(spark, dir, name)
   }
 
-  /** Release every persisted input cached for this (session, dir) — the
+  /** The (application id, dir, name) of every memoized input. */
+  private[graft] def keys: Set[(String, String, String)] = cache.keySet.toSet
+
+  /** Release every input memoized for this (session, dir) — the
     * Tables-level twin of `graft.Artifacts.clear`. A session that reads
     * several corpora (ScaleShapeSpec's ×1 and ×4 dirs) otherwise holds
-    * EVERY earlier corpus' fact tables at MEMORY_AND_DISK for the rest of
-    * the session; NdcgSpec drops a dir's cache to re-read it. */
+    * EVERY earlier corpus' spread tables at MEMORY_AND_DISK for the rest
+    * of the session; NdcgSpec drops a dir's memo to re-read it. */
   def release(spark: SparkSession, dir: String): Unit = {
     val appId = spark.sparkContext.applicationId
     cache.keys.filter(k => k._1 == appId && k._2 == dir).foreach { k =>

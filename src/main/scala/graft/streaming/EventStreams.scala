@@ -333,8 +333,11 @@ object EventStreams {
     * a memory sink and hand back the materialized result. Swap
     * `format("memory")` for kafka/parquet for a production sink — the plan
     * upstream is identical. The sink table registers in the catalog of the
-    * session that OWNS the streaming plan (which may be a [[streamSession]]
-    * child), so it is read back from there. */
+    * session that OWNS the streaming plan (often a [[streamSession]]
+    * child). The sink already holds its rows in memory, so they are read
+    * back (no job) into a frame of `spark` and the sink's view is dropped: a
+    * frame of the child would keep the child session, its sink and its
+    * listener buses reachable for as long as the caller's plans are. */
   def runToMemory(spark: SparkSession, streamed: DataFrame,
                   mode: String = "append"): DataFrame = {
     val name = s"graft_stream_${sinkCounter.incrementAndGet()}"
@@ -345,7 +348,11 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    streamed.sparkSession.table(name)
+    val owner = streamed.sparkSession
+    val sink = owner.table(name)
+    val out = spark.createDataFrame(sink.collectAsList(), sink.schema)
+    owner.catalog.dropTempView(name)
+    out
   }
 
   /** K6: upsert sink — foreachBatch applies last-window-wins per key, the
