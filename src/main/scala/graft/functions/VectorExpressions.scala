@@ -247,7 +247,7 @@ case class LshBucketFloat(vec: Expression, planes: Expression)
   * per candidate pair (15.6 M pairs for q66 at ×30 in SCALE.md's sf0.1
   * record — the allocation cost center of the whole containment family).
   * Every near-dup verify counts with it: q66's containment
-  * (`DocQueries.containmentJoinToks`) and the Jaccard verifies of q25/q79,
+  * (`DocQueries.containmentJoin`) and the Jaccard verifies of q25/q79,
   * q74 and q87 (`DocQueries.withOverlapUnion`). This is the classic merge-style
   * two-pointer count: one pass, zero allocation, duplicate values
   * counted once (matching array_intersect's distinct semantics — the

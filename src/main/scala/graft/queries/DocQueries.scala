@@ -34,17 +34,21 @@ object DocQueries {
     graft.Artifacts(input, kind)(
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** The shared TOKENIZED corpus every doc-family query reads:
-    * (doc_id, lang, chars, bpe, toks), persisted once. Two reasons this is
-    * a table and not a per-query expression:
+  /** The shared TOKENIZED corpus the token-reading queries share:
+    * (doc_id, lang, source, chars, bpe, toks), persisted once. Two
+    * reasons this is a table and not a per-query expression:
     *   - HOF expressions are interpreted and not CSE'd, so a projection
     *     that mentions `toks(text)` k times re-runs the regex split k times
     *     per row; materializing the array column removes the multiplier.
-    *   - q21–q25 and q47 all start from the same tokenization; at cluster
-    *     scale this is the checkpoint a curation run materializes once
-    *     rather than re-tokenizing 100 TB per consumer. (Spark's cache
-    *     manager dedups same-plan persists, so every caller here shares
-    *     one InMemoryRelation.)
+    *   - q21–q24, q47, q50 and the rest of the family read the token
+    *     arrays themselves, many of them several times; at cluster scale
+    *     this is the checkpoint a curation run materializes once rather
+    *     than re-tokenizing 100 TB per consumer. (Spark's cache manager
+    *     dedups same-plan persists, so every caller here shares one
+    *     InMemoryRelation.)
+    * The near-dup family does NOT read it: [[shingledHashed]] tokenizes
+    * inline, because it reads the tokens once, to hash the shingles, and
+    * caching 2.8× the raw corpus to save one split per row does not pay.
     * Raw text is dropped — the cached row carries only fixed-width stats
     * and the token array.
     *
@@ -196,7 +200,8 @@ object DocQueries {
     * shingle(3-word) → 8 MinHash signatures (lexicographic min of seeded
     * md5 over the shingle set) → 4 bands of 2 rows → explode band keys →
     * self equi-join on band key (doc_a < doc_b) → exact Jaccard verify
-    * ≥ 0.7 on the candidate pairs only.
+    * ≥ 0.7 on the candidate pairs only. It reads the session's shingle
+    * table ([[shingledHashed]]) and never the tokenized corpus.
     *
     * At 100 TB the only shuffles are the band-key join (fixed 65-byte keys)
     * and the two hash joins that re-attach the sorted shingle-hash arrays
@@ -204,24 +209,46 @@ object DocQueries {
     * count is bounded by true near-dups + banding false positives, never
     * O(n²). */
   def q25DocsMinhashNeardup(spark: SparkSession, dir: String): DataFrame =
-    minhashNeardupToks(
-      tokenizedDocs(Tables(spark, dir, "documents")), 0.7)
+    minhashNeardup(Tables(spark, dir, "documents"), 0.7)
 
-  /** The reusable operator behind q25: takes any (doc_id, text) frame.
+  /** The reusable operator behind q25 over any (doc_id, text, …) frame.
     *
     * Perf note: each shingle is hashed with md5 ONCE to a 56-bit long; the
     * 8 MinHash functions are then cheap multiply-add rehashes of that long
     * (`(h·(2s+1) + 7919s) mod p` — the standard universal-hash family).
     * The naive per-seed md5 (8× the digest work) benched 43 s at sf0.1;
-    * this shape is ~20× cheaper on the hashing stage. */
-  def minhashNeardup(docs: DataFrame, threshold: Double): DataFrame =
-    minhashNeardupToks(
-      docs.select(col("doc_id"), toks(col("text")).as("toks")), threshold)
+    * this shape is ~20× cheaper on the hashing stage.
+    *
+    * The verify re-attaches the sorted hash arrays and counts the
+    * intersection with `graft_overlap` ([[withOverlapUnion]]). Equal
+    * shingles hash equal, so the hash Jaccard equals the string Jaccard
+    * unless two DISTINCT shingles of one pair collide in 56 bits
+    * (~2⁻⁵⁶·|A|·|B|, q66/q87's argument). The cut is on the ROUNDED
+    * value, as the q25 oracle states it (round to 4 places, then
+    * ≥ threshold) — unlike q66/q87/q74, which cut unrounded. */
+  def minhashNeardup(docs: DataFrame, threshold: Double): DataFrame = {
+    val withHs = shingledHashed(docs)
+    withOverlapUnion(candPairs(withHs)
+      .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
+      .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        round(col("ov").cast("double") / col("uni"), 4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .orderBy("doc_a", "doc_b")
+  }
 
-  /** The shingled+hashed table (doc_id, hs), persisted once: it feeds
-    * three consumers (band explode + both sides of the Jaccard verify
-    * join) and at cluster scale is the checkpoint you'd always
-    * materialize rather than re-shingling the corpus per consumer.
+  /** The session's shingle table (doc_id, hs), built from a corpus'
+    * (doc_id, text) and keyed in [[graft.Artifacts]] on that projection,
+    * so every near-dup caller over one corpus shares one table whatever
+    * frame it passes. It feeds band explode, every verify join, the
+    * prefix candidates and the decontamination explode.
+    *
+    * The text is tokenized inline, not read from [[tokenizedDocs]]: the
+    * tokens are read once, to hash the shingles, so caching them does
+    * not pay. `shingles` references the token array seven times, so
+    * CollapseProject keeps it in its own projection and `split` runs
+    * once per row (inlined, the HOF trap in [[shingles]] re-splits).
+    *
     * Only the 56-bit md5-derived hash of each distinct shingle is
     * stored; the shingle strings are a transient step before hashing
     * (cached beside their hashes they would make the relation about
@@ -232,18 +259,22 @@ object DocQueries {
     * two-pointer verify, which counts the intersection per candidate
     * PAIR with zero allocation (its sorted-input contract). Every other
     * consumer treats hs as a set (band min-hash, explode), so the order
-    * is free for them. Session-scoped like [[tokenizedDocs]]; released
-    * by [[graft.Artifacts.clear]]. */
-  private def shingledHashed(tokDf: DataFrame): DataFrame =
-    memoShared(tokDf, "shingled") {
-      // size(toks) >= 3 ⟺ a non-empty shingle set. A filter on the
-      // shingle array itself is pushed below this projection and builds
-      // every document's shingles twice.
-      tokDf
-        .filter(size(col("toks")) >= 3)
+    * is free for them.
+    *
+    * Documents of fewer than 3 tokens have no shingle and are dropped.
+    * The drop is a filter on `size(hs) > 0` above the persisted
+    * relation (the same rows as `size(toks) >= 3`): a filter below it
+    * is pushed under the token projection and splits every row twice.
+    * Session-scoped like [[tokenizedDocs]]; released by
+    * [[graft.Artifacts.clear]]. */
+  private def shingledHashed(docs: DataFrame): DataFrame = {
+    val text = docs.select("doc_id", "text")
+    memoShared(text, "shingled") {
+      text.select(col("doc_id"), toks(col("text")).as("toks"))
         .select(col("doc_id"), array_sort(transform(shingles(col("toks")),
           x => md5Long(x, 14))).as("hs"))
-    }
+    }.filter(size(col("hs")) > 0)
+  }
 
   /** The banded candidate pairs BEFORE the exact-Jaccard verify — the
     * quantity whose growth decides whether MinHash+LSH survives a scale-up
@@ -251,8 +282,7 @@ object DocQueries {
     * degenerate). ScaleShapeSpec pins its count at ×1 and ×4; q25
     * consumes it via the verify join. */
   private[graft] def minhashCandidates(docs: DataFrame): DataFrame =
-    candPairs(shingledHashed(
-      docs.select(col("doc_id"), toks(col("text")).as("toks"))))
+    candPairs(shingledHashed(docs))
 
   /** (doc_id, band_key) — 4 bands × 2 MinHash rows per doc, band id baked
     * into the key so one equi-join covers all bands. Shared by the
@@ -274,28 +304,6 @@ object DocQueries {
         col("a.band_key") === col("b.band_key") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-  }
-
-  /** Same operator over an already-tokenized (doc_id, ..., toks) frame —
-    * the form the registered queries use so the whole doc family shares
-    * one tokenized InMemoryRelation and one shingle table.
-    *
-    * The verify re-attaches the sorted hash arrays and counts the
-    * intersection with `graft_overlap` ([[withOverlapUnion]]). Equal
-    * shingles hash equal, so the hash Jaccard equals the string Jaccard
-    * unless two DISTINCT shingles of one pair collide in 56 bits
-    * (~2⁻⁵⁶·|A|·|B|, q66/q87's argument). The cut is on the ROUNDED
-    * value, as the q25 oracle states it (round to 4 places, then
-    * ≥ threshold) — unlike q66/q87/q74, which cut unrounded. */
-  private def minhashNeardupToks(tokDf: DataFrame, threshold: Double): DataFrame = {
-    val withHs = shingledHashed(tokDf)
-    withOverlapUnion(candPairs(withHs)
-      .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
-      .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("ov").cast("double") / col("uni"), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Adds `ov` = |A∩B|, the `graft_overlap` two-pointer count over the
@@ -570,22 +578,22 @@ object DocQueries {
     * membership never leaves the scan. */
   def decontaminate(docs: DataFrame, heldOut: Column, minShared: Int): DataFrame =
     decontaminateSh(
-      shingledHashed(tokenizedDocs(docs))
+      shingledHashed(docs)
         .join(docs.select(col("doc_id"), heldOut.as("held_out")), "doc_id"),
       minShared)
 
-  /** [[decontaminate]] restricted to an id manifest: the shingle table
-    * comes from the SESSION-SHARED full-corpus tokenization, semi-joined
-    * to `ids` — per-doc tokenize/shingle are content-pure, so this is
+  /** [[decontaminate]] restricted to an id manifest: the SESSION-SHARED
+    * full-corpus shingle table ([[shingledHashed]]), semi-joined to
+    * `ids` — per-doc tokenize/shingle are content-pure, so this is
     * row-for-row the shingle table of the restricted frame without
-    * re-tokenizing (and re-persisting) the subset per call. The funnel's
+    * re-shingling (and re-persisting) the subset per call. The funnel's
     * decontamination stage rides this (r20: q160 previously re-tokenized
     * and re-shingled the ~whole corpus per RUN because its stage frames
     * are fresh checkpoint-rooted plans that can never cache-hit). */
   private def decontaminateWithin(docs: DataFrame, ids: DataFrame,
                                   heldOut: Column, minShared: Int): DataFrame =
     decontaminateSh(
-      shingledHashed(tokenizedDocs(docs))
+      shingledHashed(docs)
         .join(ids, Seq("doc_id"), "left_semi")
         .join(docs.select(col("doc_id"), heldOut.as("held_out")), "doc_id"),
       minShared)
@@ -632,9 +640,8 @@ object DocQueries {
     * any predicate over the corpus columns works — same contract as
     * [[decontaminate]]. */
   def q74IncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir, "documents")
-    incrementalDedupToks(docs, tokenizedDocs(docs), col("doc_id") % 10 === 7,
-      0.7, 10)
+    incrementalDedup(Tables(spark, dir, "documents"),
+      col("doc_id") % 10 === 7, 0.7, 10)
   }
 
   /** The reusable operator behind q74: one row per delta document —
@@ -643,17 +650,10 @@ object DocQueries {
     * shared with the corpus". Jaccard and the shared-shingle count use
     * the UNROUNDED values (the q66 lesson: rounding before a threshold
     * cut silently voids the recall argument in the boundary band).
-    * Takes any (doc_id, text) frame; the registered form feeds it the
-    * session-shared tokenized corpus instead. */
+    * Takes any (doc_id, text, …) frame and reads its session shingle
+    * table. */
   def incrementalDedup(docs: DataFrame, isDelta: Column,
-                       jaccardT: Double, minShared: Int): DataFrame =
-    incrementalDedupToks(docs,
-      docs.select(col("doc_id"), toks(col("text")).as("toks")),
-      isDelta, jaccardT, minShared)
-
-  private def incrementalDedupToks(docs: DataFrame, tokDf: DataFrame,
-                                   isDelta: Column, jaccardT: Double,
-                                   minShared: Int): DataFrame = {
+                       jaccardT: Double, minShared: Int): DataFrame = {
     val member = docs.select(col("doc_id"),
       md5(lower(trim(col("text")))).as("text_hash"), isDelta.as("is_delta"))
     val delta = member.filter(col("is_delta"))
@@ -673,7 +673,7 @@ object DocQueries {
 
     // Split the shared shingle store by the membership predicate (one
     // doc_id-keyed join, same pattern as decontaminate).
-    val wh = shingledHashed(tokDf)
+    val wh = shingledHashed(docs)
       .join(member.select("doc_id", "is_delta"), "doc_id")
     val deltaHs = wh.filter(col("is_delta"))
     val corpusHs = wh.filter(!col("is_delta"))
@@ -853,13 +853,16 @@ object DocQueries {
     * changed-label count: one action per round over the node table,
     * never a corpus-scan action.
     *
+    * The pairs are q25's, read off the session shingle table; q79 never
+    * builds the tokenized corpus.
+    *
     * The oracle recomputes components with a structurally different
     * algorithm — DuckDB's recursive-CTE transitive closure — so a hash
     * match certifies the component assignment itself, not a shared
     * implementation. */
   def q79DedupClusters(spark: SparkSession, dir: String): DataFrame =
     dedupClusters(
-      minhashNeardupToks(tokenizedDocs(Tables(spark, dir, "documents")), 0.7)
+      minhashNeardup(Tables(spark, dir, "documents"), 0.7)
         .select("doc_a", "doc_b"))
       .orderBy("cluster_id", "doc_id")
 
@@ -1257,6 +1260,8 @@ object DocQueries {
     * every doc except the min doc_id per content hash) plus near-dup
     * losers (q25 policy — the larger doc_id of each verified pair).
     *
+    * The near-dup half reads the same session shingle table as q25/q79.
+    *
     * Persisted like the tokenized/shingle tables (and released by the
     * same [[graft.Artifacts.clear]]): three consumers (q41 corpus, q47
     * manifest, q52 mix) anti-join against this set, and without the cache
@@ -1273,7 +1278,7 @@ object DocQueries {
           org.apache.spark.sql.expressions.Window.partitionBy("text_hash")))
         .filter(col("doc_id") =!= col("keep"))
         .select("doc_id")
-      val nearLosers = minhashNeardupToks(tokenizedDocs(docs), 0.7)
+      val nearLosers = minhashNeardup(docs, 0.7)
         .select(col("doc_b").as("doc_id"))
       exactLosers.union(nearLosers).distinct()
     }
@@ -1455,12 +1460,7 @@ object DocQueries {
     * collision can only create a spurious candidate (killed by the exact
     * verify), never lose one: equal shingles always hash equal. */
   def q66DocsContainment(spark: SparkSession, dir: String): DataFrame =
-    containmentJoinToks(tokenizedDocs(Tables(spark, dir, "documents")), 0.8)
-
-  /** The reusable operator behind q66: any (doc_id, text) frame. */
-  def containmentJoin(docs: DataFrame, threshold: Double): DataFrame =
-    containmentJoinToks(
-      docs.select(col("doc_id"), toks(col("text")).as("toks")), threshold)
+    containmentJoin(Tables(spark, dir, "documents"), 0.8)
 
   /** The prefix-join candidate pairs BEFORE the exact verify — the
     * quantity whose growth decides whether prefix filtering survives a
@@ -1472,12 +1472,10 @@ object DocQueries {
     * q66 scaladoc for the measured trade). */
   def containmentCandidates(docs: DataFrame, threshold: Double,
                             dfOrder: Boolean = false): DataFrame =
-    containmentCandidatesToks(shingledHashed(
-      docs.select(col("doc_id"), toks(col("text")).as("toks"))), threshold,
-      dfOrder)
+    prefixCandidates(shingledHashed(docs), threshold, dfOrder)
 
-  private def containmentCandidatesToks(withHs: DataFrame, t: Double,
-                                        dfOrder: Boolean = false): DataFrame = {
+  private def prefixCandidates(withHs: DataFrame, t: Double,
+                               dfOrder: Boolean = false): DataFrame = {
     // |A| − ⌈t·|A|⌉ + 1 smallest shingles under the canonical order: the
     // prefix that must intersect A∩B for any B with containment ≥ t (see
     // scaladoc proof — valid for ANY global total order).
@@ -1515,8 +1513,9 @@ object DocQueries {
       .select("doc_a", "doc_b").distinct()
   }
 
-  private def containmentJoinToks(tokDf: DataFrame, t: Double): DataFrame = {
-    val withHs = shingledHashed(tokDf)
+  /** The reusable operator behind q66: any (doc_id, text, …) frame. */
+  def containmentJoin(docs: DataFrame, threshold: Double): DataFrame = {
+    val withHs = shingledHashed(docs)
     // Verify on the 56-bit hash arrays, not the shingle strings: the
     // candidate set can far exceed the true pair count (519k candidates
     // vs 512 pairs at sf0.1 under hash order; the DF order cuts this),
@@ -1540,14 +1539,14 @@ object DocQueries {
     // from the unrounded t) is NOT guaranteed to surface once docs exceed
     // ~20k distinct shingles, silently voiding the exact-recall proof in
     // that hairline band. The oracle applies the same unrounded cut.
-    graft.functions.VectorExpressions.register(tokDf.sparkSession)
-    containmentCandidatesToks(withHs, t)
+    graft.functions.VectorExpressions.register(docs.sparkSession)
+    prefixCandidates(withHs, threshold)
       .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
       .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         (call_function("graft_overlap", col("ha"), col("hb")).cast("double") /
           size(col("ha"))).as("c_raw"))
-      .filter(col("c_raw") >= t)
+      .filter(col("c_raw") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("c_raw"), 4).as("containment"))
       .orderBy("doc_a", "doc_b")
   }
@@ -1579,30 +1578,24 @@ object DocQueries {
     * half the shingle table; the length filter then kills the
     * size-mismatched half of candidates before any array is touched. */
   def q87DocsJaccardJoin(spark: SparkSession, dir: String): DataFrame =
-    jaccardJoinToks(tokenizedDocs(Tables(spark, dir, "documents")), 0.5)
+    jaccardJoin(Tables(spark, dir, "documents"), 0.5)
 
-  /** The reusable operator behind q87: any (doc_id, text) frame. */
-  def jaccardJoin(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardJoinToks(
-      docs.select(col("doc_id"), toks(col("text")).as("toks")), threshold)
-
-  // Containment candidates list every qualifying (A,B) with A's prefix
-  // hitting the overlap — for Jaccard both orientations qualify, so
-  // canonicalize to doc_a < doc_b before the (expensive) verify joins.
-  private def jaccardCandidatesToks(withHs: DataFrame, t: Double): DataFrame =
-    containmentCandidatesToks(withHs, t)
+  /** The reusable operator behind q87: any (doc_id, text, …) frame. */
+  def jaccardJoin(docs: DataFrame, threshold: Double): DataFrame = {
+    val withHs = shingledHashed(docs)
+    // Containment candidates list every qualifying (A,B) with A's prefix
+    // hitting the overlap — for Jaccard both orientations qualify, so
+    // canonicalize to doc_a < doc_b before the (expensive) verify joins.
+    val cand = prefixCandidates(withHs, threshold)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .distinct()
-
-  private def jaccardJoinToks(tokDf: DataFrame, t: Double): DataFrame = {
-    val withHs = shingledHashed(tokDf)
-    withOverlapUnion(jaccardCandidatesToks(withHs, t)
+    withOverlapUnion(cand
       .join(withHs.select(col("doc_id").as("doc_a"), col("hs").as("ha")), "doc_a")
       .join(withHs.select(col("doc_id").as("doc_b"), col("hs").as("hb")), "doc_b")
-      .filter(size(col("hb")).cast("double") >= lit(t) * size(col("ha")) &&
-        size(col("ha")).cast("double") >= lit(t) * size(col("hb"))))
-      .filter(col("ov").cast("double") / col("uni") >= t)
+      .filter(size(col("hb")).cast("double") >= lit(threshold) * size(col("ha")) &&
+        size(col("ha")).cast("double") >= lit(threshold) * size(col("hb"))))
+      .filter(col("ov").cast("double") / col("uni") >= threshold)
       .select(col("doc_a"), col("doc_b"),
         col("ov").as("shared_ngrams"), col("uni").as("union_ngrams"),
         round(col("ov").cast("double") / col("uni"), 4).as("jaccard"))
@@ -3769,33 +3762,38 @@ object DocQueries {
     * (test-set decontamination) by measuring train-side inter-source
     * contamination pressure.
     *
-    * Scale shape: the only corpus-sized exchange is the (source, shingle)
-    * DISTINCT — a fixed-width aggregate like q20's hash groupBy. The
-    * pair join is keyed by shingle with per-key fanout bounded by
-    * #sources (each side holds a shingle at most once per source after
-    * the distinct), so candidate volume ≤ Σ_sh df(sh)² ≤ distinct
-    * shingles × #sources² — sources are a config-bounded dimension
-    * (dozens), never a corpus-sized one. Output is #sources² rows. The
-    * same plan at 100 TB: distinct-aggregate, equi-join, 190-row result. */
+    * Scale shape: the only corpus-sized exchange is the (source, h)
+    * DISTINCT over the session shingle table's 56-bit hashes
+    * ([[shingledHashed]]) — a fixed-width aggregate like q20's hash
+    * groupBy. The pair join is keyed by the 8-byte hash with per-key
+    * fanout bounded by #sources (each side holds a hash at most once per
+    * source after the distinct), so candidate volume ≤ Σ_h df(h)² ≤
+    * distinct shingles × #sources² — sources are a config-bounded
+    * dimension (dozens), never a corpus-sized one. Output is #sources²
+    * rows. The same plan at 100 TB: distinct-aggregate, equi-join,
+    * 190-row result. Counting hashes equals counting shingle strings
+    * unless two distinct shingles collide in 56 bits (q25's argument). */
   def q133SourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlap(tokenizedDocs(Tables(spark, dir, "documents")))
+    sourceOverlap(Tables(spark, dir, "documents"))
 
-  /** The reusable operator behind q133: any (source, ..., toks) frame →
-    * one row per source pair (src_a < src_b) with shared distinct
-    * 3-shingle count, each side's distinct count, and Jaccard in ppm. */
-  def sourceOverlap(tok: DataFrame): DataFrame = {
-    // The (source, shingle) distinct feeds THREE consumers (both sides of
-    // the pair self-join and the per-source totals); left uncut, each
-    // reference re-runs the corpus shingle explode + distinct (the two
-    // join sides canonicalize differently, so exchange reuse misses) —
-    // r20 optimization (guide §1.2/§2.4): one lazy lineage cut
-    // materializes it exactly once inside the first consumer's job.
+  /** The reusable operator behind q133: any (doc_id, source, text) frame
+    * with unique doc_ids → one row per source pair (src_a < src_b) with
+    * shared distinct 3-shingle count, each side's distinct count, and
+    * Jaccard in ppm. */
+  def sourceOverlap(docs: DataFrame): DataFrame = {
+    // The (source, h) distinct feeds THREE consumers (both sides of the
+    // pair self-join and the per-source totals); left uncut, each
+    // reference re-runs the corpus explode + distinct (the two join
+    // sides canonicalize differently, so exchange reuse misses) — r20
+    // optimization (guide §1.2/§2.4): one lazy lineage cut materializes
+    // it exactly once inside the first consumer's job.
     val g = cut("sourceOverlap.g",
-      tok.select(col("source"), explode(shingles(col("toks"))).as("sh"))
+      shingledHashed(docs).join(docs.select("doc_id", "source"), "doc_id")
+        .select(col("source"), explode(col("hs")).as("h"))
         .distinct())
     val n = g.groupBy("source").agg(count(lit(1)).as("nsh"))
-    val pairs = g.select(col("sh"), col("source").as("src_a"))
-      .join(g.select(col("sh"), col("source").as("src_b")), Seq("sh"))
+    val pairs = g.select(col("h"), col("source").as("src_a"))
+      .join(g.select(col("h"), col("source").as("src_b")), Seq("h"))
       .filter(col("src_a") < col("src_b"))
       .groupBy("src_a", "src_b").agg(count(lit(1)).as("shared"))
     pairs
@@ -4146,7 +4144,7 @@ object DocQueries {
     val totals = perSrc.agg(sum("n_docs").as("n_total"),
       sum("sum_score").as("total_score"))
     val jp = cut("q144.jp",
-      sourceOverlap(tok).filter(col("jaccard_ppm") >= 25000)
+      sourceOverlap(docs).filter(col("jaccard_ppm") >= 25000)
         .select(col("src_a"), col("src_b")))
     val edges = jp.select(col("src_a").as("src"), col("src_b").as("dst"))
       .unionByName(jp.select(col("src_b").as("src"), col("src_a").as("dst")))
@@ -4419,29 +4417,18 @@ object DocQueries {
     * split table is (doc_id, split) — fixed width) and a 6-row census.
     * All within-split pairs appear too (is_leak = 0): the same audit
     * doubles as the dedup-debt census per split. */
-  def q161SplitLeakageAudit(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir, "documents")
-    splitLeakageCensus(docs,
-      minhashNeardupToks(tokenizedDocs(docs), 0.7), 90, 95)
-  }
+  def q161SplitLeakageAudit(spark: SparkSession, dir: String): DataFrame =
+    splitLeakageAudit(Tables(spark, dir, "documents"), 0.7, 90, 95)
 
-  /** The reusable audit behind q161 over any (doc_id, text) frame;
-    * public so SplitLeakageSpec can plant a cross-split twin. */
+  /** The reusable audit behind q161 over any (doc_id, text, …) frame;
+    * public so SplitLeakageSpec can plant a cross-split twin. Its pairs
+    * are [[minhashNeardup]]'s, so over the registered corpus it reads the
+    * same session shingle table as q25. */
   def splitLeakageAudit(docs: DataFrame, threshold: Double,
-                        trainPct: Int, valPct: Int): DataFrame =
-    splitLeakageCensus(docs,
-      minhashNeardup(docs.select(col("doc_id"), col("text")), threshold),
-      trainPct, valPct)
-
-  /** The census over verified (doc_a, doc_b) pairs. The registered q161
-    * passes q25's pairs over the session-shared tokenized corpus, so it
-    * reads the same shingle table as q25 instead of tokenizing and
-    * shingling the corpus again under a second memo key. */
-  private def splitLeakageCensus(docs: DataFrame, pairs: DataFrame,
-                                 trainPct: Int, valPct: Int): DataFrame = {
+                        trainPct: Int, valPct: Int): DataFrame = {
     val splits = splitAssign(docs, trainPct, valPct)
       .select(col("doc_id"), col("split"))
-    pairs
+    minhashNeardup(docs, threshold)
       .join(splits.select(col("doc_id").as("doc_a"),
         col("split").as("sp_a")), "doc_a")
       .join(splits.select(col("doc_id").as("doc_b"),
@@ -4636,7 +4623,7 @@ object DocQueries {
     // (nothing local[32]-specific).
     fork { f =>
       val tokSnapA = tokenizedDocs(snapA)
-      val shSnapA = shingledHashed(tokSnapA)
+      val shSnapA = shingledHashed(snapA)
 
       // Snapshot manifests — the per-snapshot stored artifact (q159’s
       // posture: text is read once at snapshot-publish time; one pass

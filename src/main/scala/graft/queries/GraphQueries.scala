@@ -240,12 +240,19 @@ object GraphQueries {
     * the edge join (same integer value — deg is constant per src), so
     * the round's only edge-sized operations are one equi-join and the
     * partial-aggregated contrib sum; dangling mass is a map-only filter
-    * over the rank table (deg = 0), not an anti-join. */
+    * over the rank table (deg = 0), not an anti-join.
+    *
+    * The edge join is pinned to a shuffled hash join built on the
+    * node-sized share side. Left to the planner, an edge cut whose size
+    * estimate comes from a parquet scan of the line table falls under
+    * the broadcast threshold, and every round then broadcasts the
+    * corpus-sized edge list (`BroadcastHashJoin BuildLeft`). */
   private def prRound(st: PrState, r: DataFrame,
                       carryPrev: Boolean = false): DataFrame = {
     val contrib = st.edges
       .join(r.filter(col("deg") > 0)
-          .select(col("node").as("src"), expr("r div deg").as("c")),
+          .select(col("node").as("src"), expr("r div deg").as("c"))
+          .hint("shuffle_hash"),
         Seq("src"))
       .groupBy("dst").agg(sum("c").as("contrib"))
     val dang = r.filter(col("deg") === 0)

@@ -63,7 +63,7 @@ class ArtifactsSpec extends AnyFunSuite {
     }
     val held = Artifacts.held.map { case (kind, v) => kind -> rdds(v) }.toMap
     assert(held("co-supply").size == 2, "edge and node checkpoints")
-    assert(held("tokenized").size == 1, "the tokenized corpus' cached relation")
+    assert(held("shingled").size == 1, "the shingle table's cached relation")
     val ids = held.values.flatten.toSet
     val sc = spark.sparkContext
     assert(ids.subsetOf(sc.getPersistentRDDs.keySet))

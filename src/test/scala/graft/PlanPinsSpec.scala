@@ -560,6 +560,14 @@ class PlanPinsSpec extends AnyFunSuite {
       s"unexpected exchanges $hx:\n$plan")
   }
 
+  test("q91: list totals come out of one global aggregate — no window") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    val nodes = PlanAudit.collectAll(PlanAudit.physical(
+      SparkEntry.queries("q91_ivf_delta_assign")(spark, sfDir)))
+    assert(nodes.collect { case w: WindowExec => w }.isEmpty,
+      s"a window over the list table runs in one task:\n${nodes.head.treeString}")
+  }
+
   test("q92: stats collector reads the table ONCE — unpivot-then-aggregate, no per-column re-scan") {
     val plan = SparkEntry.queries("q92_table_stats")(spark, sfDir)
       .queryExecution.executedPlan.toString
@@ -835,6 +843,39 @@ class PlanPinsSpec extends AnyFunSuite {
       // ONE round's shape: its two 1-row scalar attaches at most
       assert(bnlj <= 2,
         s"$q: more nested-loop joins than one round's 1-row scalars:\n$plan")
+    }
+  }
+
+  test("q134/q139: no rank round broadcasts the edge cut; edge joins build on ranks") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    def isEdgeScan(p: SparkPlan): Boolean = p match {
+      case s: RDDScanExec => s.output.map(_.name).toSet == Set("src", "dst")
+      case _ => false
+    }
+    // Rows that come from the edge cut through row-wise operators only.
+    def edgeRows(p: SparkPlan): Boolean = p match {
+      case s if isEdgeScan(s) => true
+      case _: BaseAggregateExec => false
+      case u: UnaryExecNode => edgeRows(u.child)
+      case _ => false
+    }
+    for (q <- Seq("q134_pagerank_suppliers", "q139_trustrank_suppliers")) {
+      val nodes = PlanAudit.collectAll(PlanAudit.physical(
+        SparkEntry.queries(q)(spark, sfDir)))
+      val tree = nodes.head.treeString
+      val broadcastEdges = nodes.collect {
+        case b: BroadcastExchangeExec if edgeRows(b.child) => b
+      }
+      assert(broadcastEdges.isEmpty, s"$q broadcasts the edge list:\n$tree")
+      val edgeJoins = nodes.collect {
+        case j: ShuffledHashJoinExec if j.left.exists(isEdgeScan) => j
+      }
+      assert(edgeJoins.nonEmpty && edgeJoins.forall(_.buildSide == BuildRight),
+        s"$q: the edge join must be a shuffled hash join built on the ranks:\n$tree")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -11,12 +12,17 @@ import graft.queries.DocQueries
 import graft.sources.Tables
 
 /** The session's shingle table keeps only the sorted 56-bit shingle
-  * hashes, and every near-dup verify runs `graft_overlap` over them.
+  * hashes, is built from the documents' (doc_id, text) rather than from
+  * the tokenized corpus, and every near-dup verify runs `graft_overlap`
+  * over it.
   *
-  *   - Schema: the cached shingle relation is exactly (doc_id, hs); the
-  *     only cached relation holding string arrays is the tokenized corpus.
-  *   - One table: q161 reads q25's shingle table instead of building its
-  *     own under a second memo key.
+  *   - Schema: the cached shingle relation is exactly (doc_id, hs), and
+  *     q25 reads no cached relation holding string arrays.
+  *   - Storage: q79 alone caches the documents and the shingle table, and
+  *     no tokenized corpus.
+  *   - One table: q25, q79, q161, q74 and `minhashCandidates` over a
+  *     (doc_id, text) projection all read one shingle table.
+  *   - One split: the shingle build tokenizes each row once.
   *   - Equivalence: the hash verify equals the string-set restatement
   *     (round(|A∩B| / |A∪B|, 4) over the shingle strings) row for row,
   *     on every q25 candidate over sf0.001 and on an adversarial fixture.
@@ -27,14 +33,16 @@ class ShingleStoreSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Every node of `p`, descending into AQE's wrappers and stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }.flatMap {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case n => Seq(n)
+  }
+
   /** Every cached relation `df` reads, directly or through the cached
     * plans of the relations it reads (which AQE may wrap). */
   private def cachedRelations(df: DataFrame): Seq[InMemoryRelation] = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }.flatMap {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case n => Seq(n)
-    }
     def scans(p: SparkPlan): Seq[InMemoryRelation] =
       nodes(p).collect { case s: InMemoryTableScanExec => s.relation }
         .flatMap(r => r +: scans(r.cacheBuilder.cachedPlan))
@@ -51,6 +59,22 @@ class ShingleStoreSpec extends AnyFunSuite {
   }
 
   private def shingleEntries: Int = Artifacts.held.count(_._1 == "shingled")
+
+  private def run(q: String): DataFrame = {
+    val df = SparkEntry.queries(q)(spark, sfDir)
+    df.write.format("noop").mode("overwrite").save()
+    df
+  }
+
+  /** The cached relation of the session's one shingle table. */
+  private def shingleRelation: InMemoryRelation = {
+    val held = Artifacts.held.collect { case ("shingled", ds: Dataset[_]) => ds }
+    assert(held.size == 1, s"shingle entries: ${Artifacts.held.map(_._1)}")
+    held.head.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r
+      case p => fail(s"the shingle entry is not a cached relation:\n$p")
+    }
+  }
 
   /** Distinct 3-word shingles, restated with an index lambda rather than
     * the engine's shifted slices: the same tokenization, an independent
@@ -106,10 +130,9 @@ class ShingleStoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
   }
 
-  test("the cached shingle relation is (doc_id, hs); only the tokenized corpus caches strings") {
+  test("the shingle relation is (doc_id, hs); q25 reads no cached string array") {
     Artifacts.clear(spark)
-    val q25 = SparkEntry.queries("q25_docs_minhash_neardup")(spark, sfDir)
-    q25.write.format("noop").mode("overwrite").save()
+    val q25 = run("q25_docs_minhash_neardup")
     val rels = cachedRelations(q25)
     val shingle = rels.filter(_.output.exists(_.name == "hs"))
     assert(shingle.size == 1, s"expected one shingle relation, got $shingle")
@@ -118,23 +141,51 @@ class ShingleStoreSpec extends AnyFunSuite {
       Seq("doc_id" -> "bigint", "hs" -> "array<bigint>"),
       s"shingle relation schema: ${shingle.head.schema.simpleString}")
     val stringRels = rels.filter(_.schema.fields.exists(isStringArray))
-    assert(stringRels.map(_.output.map(_.name)) ==
-      Seq(Seq("doc_id", "lang", "source", "chars", "bpe", "toks")),
+    assert(stringRels.isEmpty,
       s"cached relations with string arrays: ${stringRels.map(_.schema.simpleString)}")
     assert(shingleEntries == 1)
   }
 
-  test("q161 reads q25's shingle table: one shingle relation after both") {
+  test("q79 alone caches the documents and the shingle table, no tokenized corpus") {
+    spark.stop() // a fresh context: no other suite's persisted frames
+    val s = spark
+    run("q79_dedup_clusters")
+    assert(!Artifacts.held.exists(_._1 == "tokenized"),
+      s"entries: ${Artifacts.held.map(_._1)}")
+    val docs = Tables(s, sfDir, "documents").queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id }
+      .getOrElse(fail("documents is not read from a cached relation"))
+    val shingle = shingleRelation.cacheBuilder.cachedColumnBuffers.id
+    // The CC loop's lineage cuts hold their blocks until they are cleaned;
+    // everything else stored is a cached relation.
+    val cuts = s.sparkContext.getPersistentRDDs.filter(_._2.isCheckpointed).keySet
+    val stored = s.sparkContext.getRDDStorageInfo.toSeq.filterNot(i => cuts(i.id))
+    assert(stored.map(_.id).sorted == Seq(docs, shingle).sorted,
+      s"stored: ${stored.map(i => s"${i.id} ${i.name}")}")
+  }
+
+  test("q25, q79, q161, q74 and minhashCandidates read one shingle table") {
     Artifacts.clear(spark)
-    val outs = Seq("q25_docs_minhash_neardup", "q161_split_leakage_audit")
-      .map(q => SparkEntry.queries(q)(spark, sfDir))
-    outs.foreach(_.write.format("noop").mode("overwrite").save())
+    val outs = Seq("q25_docs_minhash_neardup", "q79_dedup_clusters",
+      "q161_split_leakage_audit", "q74_incremental_dedup").map(run)
+    val cand = DocQueries.minhashCandidates(
+      Tables(spark, sfDir, "documents").select("doc_id", "text"))
+    cand.write.format("noop").mode("overwrite").save()
     assert(shingleEntries == 1,
       s"shingle tables built: ${Artifacts.held.map(_._1)}")
-    val shingleRdds = outs.flatMap(cachedRelations)
+    val shingleRdds = (outs :+ cand).flatMap(cachedRelations)
       .filter(_.output.exists(_.name == "hs"))
       .map(_.cacheBuilder.cachedColumnBuffers.id).distinct
     assert(shingleRdds.size == 1, s"shingle relations read: $shingleRdds")
+  }
+
+  test("the shingle build splits each row once") {
+    Artifacts.clear(spark)
+    run("q25_docs_minhash_neardup")
+    val build = shingleRelation.cacheBuilder.cachedPlan
+    val splits = nodes(build)
+      .flatMap(_.expressions.flatMap(_.collect { case e: StringSplit => e }))
+    assert(splits.size == 1, s"split runs ${splits.size} times per row:\n$build")
   }
 
   test("hash verify ≡ string-set verify on every q25 candidate over sf0.001") {

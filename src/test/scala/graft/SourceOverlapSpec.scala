@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Value-level pins for the q133 cross-source overlap matrix on a
@@ -12,17 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class SourceOverlapSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def tok(rows: Seq[(Long, String, String)]) = {
+  private def corpus(rows: Seq[(Long, String, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "source", "text")
-      .select(col("doc_id"), col("source"),
-        split(lower(trim(col("text"))), "\\s+").as("toks"))
   }
 
   test("hand-checked matrix: shared counts, Jaccard ppm, and zero-overlap pair absence") {
     // A: {"a b c","b c d"}; B: {"a b c","b c x"}; C: {"p q r","q r s"}.
     // A∩B = {"a b c"} → jaccard 1/(2+2-1) = 333333 ppm; A∩C = B∩C = ∅.
-    val out = graft.queries.DocQueries.sourceOverlap(tok(Seq(
+    val out = graft.queries.DocQueries.sourceOverlap(corpus(Seq(
         (1L, "A", "a b c d"),
         (2L, "B", "a b c x"),
         (3L, "C", "p q r s"))))
@@ -35,7 +32,7 @@ class SourceOverlapSpec extends AnyFunSuite {
   test("within-source duplication never inflates a cell: counts are over DISTINCT shingles") {
     // Source A carries the same shingle in two documents; B shares it.
     // shared must be 1, nsh_a must be 1 (distinct per source).
-    val out = graft.queries.DocQueries.sourceOverlap(tok(Seq(
+    val out = graft.queries.DocQueries.sourceOverlap(corpus(Seq(
         (1L, "A", "a b c"),
         (2L, "A", "a b c"),
         (3L, "B", "a b c"))))
