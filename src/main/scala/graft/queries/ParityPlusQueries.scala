@@ -131,11 +131,10 @@ object ParityPlusQueries {
   def q44GeoAutoRewrite(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
     s.experimental.extraOptimizations = Seq(graft.plans.GeoGridJoinRule)
-    s.conf.set("spark.graft.cacheInputs", "false") // plans must bind to s
-    val ev = Tables(s, dir, "events")
+    val ev = Tables.read(s, dir, "events")
       .withColumn("ev_lat", (col("event_id") * 17 % 120 - 60).cast("double"))
       .withColumn("ev_lon", (col("event_id") * 29 % 360 - 180).cast("double"))
-    val airports = Tables(s, dir, "nation")
+    val airports = Tables.read(s, dir, "nation")
       .withColumn("ap_lat", (col("n_nationkey") * 7 % 120 - 60).cast("double"))
       .withColumn("ap_lon", (col("n_nationkey") * 13 % 360 - 180).cast("double"))
       .select("n_name", "ap_lat", "ap_lon")

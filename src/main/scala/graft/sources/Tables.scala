@@ -19,9 +19,7 @@ import scala.collection.concurrent.TrieMap
   *     for each of its 9 queries (batch_process.py:243-253),
   *   - only the tables that are re-laid out across the session's cores are
   *     persisted: an in-memory copy of a file-order table is worth no more
-  *     than the single-split scan it replaces,
-  *   - at cluster scale the memo is a no-op knob (`spark.graft.cacheInputs=
-  *     false`) and plans fall back to pure parquet scans with pushdown.
+  *     than the single-split scan it replaces.
   */
 object Tables {
 
@@ -74,8 +72,8 @@ object Tables {
     id
   }
 
-  /** Load `<dir>/<name>.parquet`, memoized per (session, dir) if hot and
-    * caching enabled. The memo buys one schema inference per table: every
+  /** Load `<dir>/<name>.parquet`, memoized per (session, dir) if hot.
+    * The memo buys one schema inference per table: every
     * `spark.read.parquet` otherwise runs a one-task job to read the
     * footer. A file-order table stays an unpersisted scan, so its reads
     * keep file order and pushdown.
@@ -93,12 +91,9 @@ object Tables {
     * dominated at sf0.1 (the round-5 q20/q46 slowdowns: 32 tasks × ~60
     * rows per stage; measured +0.3–0.5 s each, recovered by this rule).
     * At 100 TB the same files carry thousands of row groups and split
-    * naturally — which is why the `cacheInputs=false` cluster path stays
-    * a pure pushdown-friendly scan with no forced exchange. */
+    * naturally. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val cachingOn =
-      !spark.conf.getOption("spark.graft.cacheInputs").contains("false")
-    if (cachingOn && hot(name)) {
+    if (hot(name)) {
       cache.getOrElseUpdate((live(spark), dir, name), {
         val df = read(spark, dir, name)
         spread.get(name) match {
@@ -135,7 +130,10 @@ object Tables {
     }
   }
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** `<dir>/<name>.parquet` read afresh in `spark`, bypassing the memo:
+    * a query that runs in a child session (q44) reads through this so
+    * its plan binds to that session, not to the parent's memoized frame. */
+  private[graft] def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     // The testdata writer emits TIMESTAMP(NANOS) parquet, which Spark 4
     // rejects unless the session was built with
     // spark.sql.legacy.parquet.nanosAsLong=true (a session-build setting —

@@ -79,7 +79,7 @@ class ArtifactsSpec extends AnyFunSuite {
     touch(); touch()
     assert(builds.get == 1)
     val old = spark.sparkContext.applicationId
-    spark.stop()
+    SparkTestSession.stop()
     assert(spark.sparkContext.applicationId != old)
     assert(touch() == 2)
     assert(Artifacts.held.map(_._1) == Seq("per-context"))

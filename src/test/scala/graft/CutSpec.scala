@@ -40,10 +40,10 @@ class CutSpec extends AnyFunSuite {
     * Spark's `spark.checkpoint.dir`; the context is stopped after, so the
     * suites that follow get a local-mode one again. */
   private def withCheckpointDir[T](dir: Path)(body: SparkSession => T): T = {
-    spark.stop()
+    SparkTestSession.stop()
     System.setProperty("spark.checkpoint.dir", dir.toString)
     val s = try spark finally System.clearProperty("spark.checkpoint.dir")
-    try body(s) finally s.stop()
+    try body(s) finally SparkTestSession.stop(s)
   }
 
   test("reliable-checkpoint mode returns the same results as local") {

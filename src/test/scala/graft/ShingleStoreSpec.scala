@@ -147,7 +147,7 @@ class ShingleStoreSpec extends AnyFunSuite {
   }
 
   test("q79 alone caches the documents and the shingle table, no tokenized corpus") {
-    spark.stop() // a fresh context: no other suite's persisted frames
+    SparkTestSession.stop() // a fresh context: no other suite's persisted frames
     val s = spark
     run("q79_dedup_clusters")
     assert(!Artifacts.held.exists(_._1 == "tokenized"),

@@ -34,7 +34,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("only documents and embeddings are persisted, each over at least 2 partitions") {
-    spark.stop() // a fresh context: no other suite's persisted frames
+    SparkTestSession.stop() // a fresh context: no other suite's persisted frames
     val s = spark
     Tables.all.foreach(t => Tables(s, dir, t).count())
     val spread = Seq("documents", "embeddings").map { t =>
@@ -65,7 +65,7 @@ class TablesSpec extends AnyFunSuite {
     Tables(spark, dir, "events")
     val old = spark.sparkContext.applicationId
     assert(Tables.keys.exists(_._1 == old))
-    spark.stop()
+    SparkTestSession.stop()
     Tables(spark, dir, "events")
     assert(spark.sparkContext.applicationId != old)
     assert(!Tables.keys.exists(_._1 == old), Tables.keys)
